@@ -33,25 +33,13 @@ def _fit_loop(model, plans, runtimes, epochs, lr, log_every, batch_size, seed) -
     practical on multi-thousand-row corpora (one full-batch step per
     epoch needs hundreds of epochs; 64-row batches reach the same loss
     in a tenth of the wall-clock)."""
-    import os as _os
     import random as _random
 
     targets = [math.log2(max(t, 1e-3)) for t in runtimes]
     losses: list[float] = []
     rng = _random.Random(seed)
     idx = list(range(len(plans)))
-    # opt-in cosine decay (DQO_LR_DECAY=cosine): anneal to 10% of the
-    # base lr over the run — late small steps settle into a sharper
-    # minimum than a constant rate; off by default to keep the
-    # published recipe reproducible
-    cosine = _os.environ.get("DQO_LR_DECAY") == "cosine"
-    base_lr = lr
-    from deep_query_optimization_spark.quiet import wait_if_quiet_window
-
     for e in range(epochs):
-        wait_if_quiet_window()  # yield the box to a timed measurement
-        if cosine and epochs > 1:
-            lr = base_lr * (0.1 + 0.9 * 0.5 * (1 + math.cos(math.pi * e / (epochs - 1))))
         if batch_size and batch_size < len(idx):
             rng.shuffle(idx)
             total, n_batches = 0.0, 0

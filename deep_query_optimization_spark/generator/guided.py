@@ -25,7 +25,7 @@ from dataclasses import dataclass, field
 from deep_query_optimization_spark.catalog import Database
 from deep_query_optimization_spark.generator import RandomQueryGen
 from deep_query_optimization_spark.generator.partitioner import Log2Partitioner
-from deep_query_optimization_spark.quiet import HardDeadlineError
+from deep_query_optimization_spark.lab.deadline import HardDeadlineError
 from deep_query_optimization_spark.relational.builder import QueryBuilder
 from deep_query_optimization_spark.relational.query import Query
 
@@ -345,8 +345,8 @@ class BalancedQueryGen:
                 query, runtime, hit = gen.step()
             except HardDeadlineError:
                 # the whole-run budget backstop (gen_workload wraps the
-                # generate loop in quiet.hard_deadline) raising out of an
-                # in-flight step is NOT a lineage failure: swallowing it
+                # generate loop in lab.deadline.hard_deadline) raising out
+                # of an in-flight step is NOT a lineage failure: swallowing it
                 # here would consume the one-shot outer timer and leave
                 # the rest of the run with no hard backstop at all
                 raise

@@ -38,10 +38,14 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
+from deep_query_optimization_spark.lab.deadline import HardDeadlineError, hard_deadline
 from deep_query_optimization_spark.relational.query import Query
 from deep_query_optimization_spark.relational.rewrite import optimize_query
 
 DEFAULT_TIMEOUT_S = 600.0  # reference postgres.py:244
+# slack past ``timeout_s * wedge_cap_factor`` before the per-query
+# SIGALRM wedge cap fires (SparkQueryRunner.wedge_cap_factor)
+WEDGE_CAP_PAD_S = 30.0
 
 
 class QueryLog:
@@ -99,8 +103,8 @@ class SparkQueryRunner:
     group_prefix: str = "dqo-lab"
     # >0 enables the per-query SIGALRM backstop: a query the watchdog's
     # cancelJobGroup cannot reach (wedged in a non-cancellable Spark
-    # phase) is broken out of its py4j wait at
-    # ``timeout_s * wedge_cap_factor + 30`` and censored at its elapsed
+    # phase) is broken out of its py4j wait at ``timeout_s *
+    # wedge_cap_factor + WEDGE_CAP_PAD_S`` and censored at its elapsed
     # wall, instead of holding the whole run hostage until the caller's
     # whole-budget deadline. ``wedged`` is latched so callers can
     # checkpoint and exit — the interrupted py4j connection is not
@@ -131,37 +135,32 @@ class SparkQueryRunner:
         With ``wedge_cap_factor`` set, a run the watchdog could not
         cancel is additionally bounded by a SIGALRM hard cap: it too
         returns censored-at-elapsed, but latches ``self.wedged`` so the
-        caller can stop cleanly (quiet.hard_deadline docstring)."""
-        if self.wedge_cap_factor > 0:
-            import threading as _threading
-
-            from deep_query_optimization_spark.quiet import HardDeadlineError, hard_deadline
-
-            if _threading.current_thread() is _threading.main_thread():
-                t0 = time.perf_counter()
-                hd = {"expired": False}
-                try:
-                    with hard_deadline(self.timeout_s * self.wedge_cap_factor + 30.0) as hd:
-                        return self._run_timed_inner(df)
-                except HardDeadlineError:
-                    # only the INNER window's expiry is a per-query
-                    # wedge; an OUTER whole-run deadline (nested
-                    # hard_deadline re-armed with negative remaining at
-                    # our exit) must propagate to the caller's own
-                    # HardDeadlineError checkpoint path, not be
-                    # mislabeled "Spark connection suspect"
-                    if not hd["expired"]:
-                        raise
+        caller can stop cleanly (lab.deadline.hard_deadline docstring)."""
+        if self.wedge_cap_factor > 0 and threading.current_thread() is threading.main_thread():
+            t0 = time.perf_counter()
+            hd = {"expired": False}
+            try:
+                with hard_deadline(self.timeout_s * self.wedge_cap_factor + WEDGE_CAP_PAD_S) as hd:
+                    return self._run_timed_inner(df)
+            except HardDeadlineError:
+                # only the INNER window's expiry is a per-query
+                # wedge; an OUTER whole-run deadline (nested
+                # hard_deadline re-armed with negative remaining at
+                # our exit) must propagate to the caller's own
+                # HardDeadlineError checkpoint path, not be
+                # mislabeled "Spark connection suspect"
+                if not hd["expired"]:
+                    raise
+                self.wedged = True
+                return time.perf_counter() - t0
+            except Exception:
+                # py4j re-wraps an exception escaping its socket
+                # wait (Py4JNetworkError / "error while calling
+                # o*.save") — a masked expiry is still a wedge
+                if hd["expired"]:
                     self.wedged = True
                     return time.perf_counter() - t0
-                except Exception:
-                    # py4j re-wraps an exception escaping its socket
-                    # wait (Py4JNetworkError / "error while calling
-                    # o*.save") — a masked expiry is still a wedge
-                    if hd["expired"]:
-                        self.wedged = True
-                        return time.perf_counter() - t0
-                    raise
+                raise
         return self._run_timed_inner(df)
 
     def _run_timed_inner(self, df: DataFrame) -> float:
@@ -199,12 +198,6 @@ class SparkQueryRunner:
 
     def time(self, sql: str) -> float:
         """Reference ``QueryExecutor.time`` (``:52-62``)."""
-        from deep_query_optimization_spark.quiet import wait_if_quiet_window
-
-        # every labeled row is a timed measurement: if another process
-        # raised a quiet window (bench.py), wait it out rather than
-        # poison both measurements with mutual contention
-        wait_if_quiet_window()
         if self.clear_cache:
             self.spark.catalog.clearCache()
         df = self.spark.sql(sql)

@@ -1,207 +1,15 @@
-"""Quiet-window coordination between timed measurements and unattended
-heavy jobs sharing the machine.
+"""Bounded wait for a calm box before a timed measurement (``bench.py``).
 
-The label-noise study (reports/estimator_label_noise.json) measured
-co-located corpus generators shifting runtime labels by whole log2
-buckets, and two consecutive rounds shipped bench artifacts taken under
-the builder's own background load. The structural fix: a measurement
-that needs the box to itself raises a SENTINEL FILE for its duration,
-and every long-running tool polls the sentinel between units of work
-(a labeled row, a training epoch) and sleeps while it is present. The
-collision becomes impossible by construction instead of by scheduling
-discipline.
-
-On a real cluster the analogue is resource-manager queues; on one
-shared local[32] box a file is the whole coordination layer needed.
-
-``DQO_QUIET_SENTINEL`` overrides the sentinel path;
-``DQO_QUIET_IGNORE=1`` opts a job out (e.g. a deliberately-concurrent
-smoke test). A sentinel older than ``STALE_S`` is ignored AND removed:
-a crashed measurement must not freeze every background job forever.
+The 1-minute load average lags: jobs that just finished still count.
+``quiet_window`` waits, for at most ``wait_timeout_s``, until it falls
+below ``wait_for_load``, and yields the load it saw last so the
+measurement can record the conditions it ran under.
 """
 
 from __future__ import annotations
 
 import contextlib
-import os
-import sys
 import time
-
-STALE_S = 30 * 60  # a bench window is minutes; 30 min means a crash
-
-
-def sentinel_path() -> str:
-    return os.environ.get("DQO_QUIET_SENTINEL", "/root/repo/.quiet_window")
-
-
-def _proc_start_time(pid: int) -> int | None:
-    """Kernel start time (clock ticks since boot) of ``pid`` from
-    /proc/<pid>/stat field 22, or None when unreadable (non-Linux,
-    process gone, permission)."""
-    try:
-        with open(f"/proc/{pid}/stat", "rb") as f:
-            stat = f.read()
-        # comm (field 2) may contain spaces/parens: split after the
-        # LAST ')' — everything before it is pid + comm
-        rest = stat.rsplit(b")", 1)[1].split()
-        return int(rest[19])  # field 22, 0-indexed 19 after state
-    except (OSError, ValueError, IndexError):
-        return None
-
-
-def _holder_alive(path: str) -> bool | None:
-    """Is the pid recorded in the sentinel still running? None when the
-    file carries no readable pid (treat as unknown -> rely on mtime).
-
-    PID-reuse guard: the sentinel records ``t=<unix start>``; if the
-    process currently wearing that pid was born AFTER the sentinel was
-    written (its /proc start time postdates t=), the original holder is
-    dead and its pid was recycled — report dead rather than queueing
-    waiters behind an unrelated process until the staleness fallback."""
-    try:
-        with open(path) as f:
-            head = f.read(256)
-        pid = int(head.split("pid=", 1)[1].split()[0])
-    except (OSError, ValueError, IndexError):
-        return None
-    try:
-        os.kill(pid, 0)
-    except ProcessLookupError:
-        return False
-    except OSError:
-        return None  # e.g. EPERM: alive but not ours
-    try:
-        wrote_at = float(head.split("t=", 1)[1].split()[0])
-    except (ValueError, IndexError):
-        return True  # no timestamp recorded: pid existence is all we have
-    ticks = _proc_start_time(pid)
-    if ticks is None:
-        return True
-    try:
-        with open("/proc/uptime") as f:
-            uptime = float(f.read().split()[0])
-        hz = os.sysconf("SC_CLK_TCK")
-        born_at = time.time() - uptime + ticks / hz
-    except (OSError, ValueError):
-        return True
-    # 5 s slack: the holder writes t= AFTER it was born, and clock
-    # sources (boot-relative ticks vs wall) round differently
-    return born_at <= wrote_at + 5.0
-
-
-def _sentinel_age() -> float | None:
-    """Age in seconds of a live sentinel, else None (absent or stale).
-
-    A sentinel is dead — removed, and None returned — when its holder
-    pid no longer exists (a SIGKILLed generator cannot run its cleanup;
-    waiters must not queue 30 minutes behind a corpse) or, for
-    pid-less/unreadable files, when mtime exceeds ``STALE_S``."""
-    path = sentinel_path()
-    try:
-        age = time.time() - os.stat(path).st_mtime
-    except OSError:
-        return None
-    if age > STALE_S or _holder_alive(path) is False:
-        with contextlib.suppress(OSError):
-            os.remove(path)  # crashed measurement left it behind
-        return None
-    return age
-
-
-def wait_if_quiet_window(poll_s: float = 10.0, log=None) -> float:
-    """Block while a quiet-window sentinel is present.
-
-    Call between units of background work (one labeled row, one epoch).
-    Returns seconds spent paused — 0.0 on the fast path (one stat()).
-    """
-    if os.environ.get("DQO_QUIET_IGNORE") == "1":
-        return 0.0
-    paused = 0.0
-    announced = False
-    while _sentinel_age() is not None:
-        if not announced:
-            (log or (lambda m: print(m, file=sys.stderr, flush=True)))(
-                f"paused: quiet window active ({sentinel_path()})"
-            )
-            announced = True
-        time.sleep(poll_s)
-        paused += poll_s
-    return paused
-
-
-@contextlib.contextmanager
-def quiet_window(wait_for_load: float | None = 2.0, wait_timeout_s: float = 180.0):
-    """Raise the sentinel for the duration of a timed measurement.
-
-    After raising it, optionally wait (bounded) for the 1-minute load
-    average to drain below ``wait_for_load`` — the sentinel stops NEW
-    work instantly, but loadavg is a lagging indicator and in-flight
-    Spark jobs take seconds to finish their current row. Yields the
-    loadavg observed when the wait ended (None if unreadable).
-    """
-    path = sentinel_path()
-    # one window at a time: if another measurement already holds the
-    # sentinel, queue behind it instead of clobbering (and then
-    # deleting) its file on our exit. A nested window in the SAME
-    # process (DQO_QUIET_IGNORE set by our own outer holder) skips the
-    # wait — it would deadlock on itself.
-    if os.environ.get("DQO_QUIET_IGNORE") != "1":
-        while _sentinel_age() is not None:
-            time.sleep(5.0)
-    with open(path, "w") as f:
-        f.write(f"pid={os.getpid()} t={time.time():.0f}\n")
-    # the window-holder's own timed calls must never wait on its own
-    # sentinel (e.g. a measurement tool that itself uses the runner)
-    prev_ignore = os.environ.get("DQO_QUIET_IGNORE")
-    os.environ["DQO_QUIET_IGNORE"] = "1"
-    try:
-        load = _read_loadavg()
-        if wait_for_load is not None:
-            deadline = time.monotonic() + wait_timeout_s
-            while load is not None and load > wait_for_load and time.monotonic() < deadline:
-                time.sleep(5.0)
-                load = _read_loadavg()
-        yield load
-    finally:
-        if prev_ignore is None:
-            os.environ.pop("DQO_QUIET_IGNORE", None)
-        else:
-            os.environ["DQO_QUIET_IGNORE"] = prev_ignore
-        with contextlib.suppress(OSError):
-            os.remove(path)
-
-
-@contextlib.contextmanager
-def hold_quiet_window(refresh_s: float = 60.0, wait_for_load: float | None = 2.0):
-    """Raise the sentinel for a LONG-lived measurement — corpus
-    labeling, where every row is a timed query and co-located trainers
-    shift labels by whole log2 buckets (reports/estimator_label_noise.json).
-
-    ``quiet_window`` writes the sentinel once, but the staleness guard
-    reclaims a sentinel older than ``STALE_S`` (a crashed bench must
-    not freeze background work forever) — too short for an hours-long
-    generation run. This variant refreshes the sentinel's mtime from a
-    daemon thread while the holder is alive, so background jobs stay
-    paused exactly as long as the generator is actually running and
-    resume the moment it exits (cleanly or not: a killed process stops
-    refreshing and the guard reclaims the file within ``STALE_S``)."""
-    import threading
-
-    stop = threading.Event()
-    with quiet_window(wait_for_load=wait_for_load) as load:
-
-        def _refresh() -> None:
-            while not stop.wait(refresh_s):
-                with contextlib.suppress(OSError):
-                    os.utime(sentinel_path())
-
-        t = threading.Thread(target=_refresh, daemon=True, name="quiet-sentinel-refresh")
-        t.start()
-        try:
-            yield load
-        finally:
-            stop.set()
-            t.join(timeout=refresh_s + 5)
 
 
 def _read_loadavg() -> float | None:
@@ -212,73 +20,18 @@ def _read_loadavg() -> float | None:
         return None
 
 
-class HardDeadlineError(Exception):
-    """Raised inside the main thread when a hard_deadline expires."""
-
-
 @contextlib.contextmanager
-def hard_deadline(seconds: float):
-    """Process-level wall-clock backstop for budget-bounded loops.
-
-    Cooperative budget checks (between queries, between batches) cannot
-    bound a SINGLE wedged call: a query stuck in a non-cancellable
-    Spark phase blocks the main thread in a py4j socket read, past
-    every in-loop deadline check (observed: a generation run holding
-    its budget hostage 12+ minutes after expiry). SIGALRM's Python
-    handler runs in the main thread even there — the signal interrupts
-    the blocked syscall — so a handler that RAISES breaks the loop out
-    of the wedge. Callers catch :class:`HardDeadlineError`, persist
-    their checkpoint (completed work is all in memory), and exit.
-
-    Main-thread only (signal semantics); no-op on platforms without
-    SIGALRM. Nesting IS supported: on exit the outer timer's REMAINING
-    time (minus what the inner body consumed) is re-armed, so a
-    per-query inner cap composes with a whole-run outer budget. The
-    inner deadline wins the signal slot while active — an outer expiry
-    that falls inside the inner window fires when the outer timer is
-    re-armed (its remaining time has gone negative, so it is re-armed
-    at the minimum interval and fires immediately).
-
-    Completion race: if SIGALRM is delivered after the body finished
-    but before the timer is cleared, the expiry is NOT raised for the
-    already-complete body — the handler only raises while the body is
-    active (armed flag cleared as the first statement of the finally).
-
-    Yields a state dict with ``expired``: an intermediate layer may
-    CATCH AND RE-WRAP the raised HardDeadlineError (py4j converts any
-    exception escaping its socket wait into Py4JNetworkError /
-    Py4JJavaError), so callers that guard such calls must consult
-    ``state["expired"]`` in their generic exception handler, not just
-    catch HardDeadlineError."""
-    import signal
-
-    state = {"expired": False}
-    if not hasattr(signal, "SIGALRM"):  # non-POSIX: backstop unavailable
-        yield state
-        return
-
-    armed = [True]
-
-    def _raise(signum, frame):
-        if armed[0]:
-            state["expired"] = True
-            raise HardDeadlineError(f"hard deadline of {seconds:.0f}s expired")
-
-    prev_handler = signal.signal(signal.SIGALRM, _raise)
-    # setitimer keeps sub-second resolution (alarm() truncates to int)
-    prev_remaining = signal.setitimer(signal.ITIMER_REAL, max(seconds, 0.001))[0]
-    t0 = time.monotonic()
-    try:
-        yield state
-    finally:
-        armed[0] = False
-        signal.setitimer(signal.ITIMER_REAL, 0)
-        signal.signal(signal.SIGALRM, prev_handler)
-        if prev_remaining > 0:
-            # re-arm the outer deadline with whatever time it has left;
-            # an already-expired outer fires (in the outer handler) at
-            # the minimum re-arm interval
-            signal.setitimer(
-                signal.ITIMER_REAL,
-                max(prev_remaining - (time.monotonic() - t0), 0.001),
-            )
+def quiet_window(wait_for_load: float | None = 2.0, wait_timeout_s: float = 180.0):
+    """Wait (bounded) for the 1-minute loadavg to drop below
+    ``wait_for_load``; yield the loadavg observed when the wait ended
+    (None if unreadable). ``wait_for_load=None`` skips the wait."""
+    load = _read_loadavg()
+    if wait_for_load is not None:
+        deadline = time.monotonic() + wait_timeout_s
+        while load is not None and load > wait_for_load:
+            left = deadline - time.monotonic()
+            if left <= 0:
+                break
+            time.sleep(min(5.0, left))
+            load = _read_loadavg()
+    yield load

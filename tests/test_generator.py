@@ -907,3 +907,22 @@ def test_log2_bucket_single_definition():
 
     assert "log2_bucket" in inspect.getsource(eng.DQOEngine.estimate_bucket)
     assert "log2_bucket" in inspect.getsource(hr.main)
+
+
+def test_balanced_gen_full_reference_span():
+    """The generator balances across the reference's full 2^-3..2^8 s
+    bucket span (dqo/query_generator/rl/partitioner.py:31-36) — no
+    clamp or overflow at the 91-300 s top buckets."""
+    import random
+
+    p = Log2Partitioner(-3, 8)
+    assert p.buckets == list(range(-3, 9))
+    lo, hi = p.bounds(8)
+    assert (lo, hi) == (128.0, 256.0)
+    rng = random.Random(0)
+    hist = {b: 0 for b in p.buckets}
+    for _ in range(500):
+        t = 2.0 ** rng.uniform(-4, 9)
+        hist[p.bucket(t)] += 1
+    assert all(hist[b] > 0 for b in p.buckets)
+    assert p.bucket(300.0) == 8  # censored-at-cap rows credit the top bucket

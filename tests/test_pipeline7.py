@@ -1,128 +1,15 @@
-"""Idempotency machinery of tools/pipeline7.py + pick_best_model.py —
-the round-6 postmortem items: artifact-staleness skip, no abort
-cascade, midnight-safe deadlines, graceful best-model pick."""
+"""Pure helpers of the corpus tools: the graceful best-model pick
+(``tools/pick_best_model.py``) and the held-out scrub
+(``tools/filter_workload.py``). The module keeps its historical name so
+the test ids stay stable."""
 
 import json
-import os
-import sys
-import time
-from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
-
-from pick_best_model import collect_candidates, pick  # noqa: E402
-from pipeline7 import Phase, build_phases, main, seconds_until  # noqa: E402
-
-
-# -- staleness ---------------------------------------------------------
-
-
-def test_phase_missing_output_is_stale(tmp_path):
-    p = Phase("x", outputs=["out.json"], cmd=["true"])
-    stale, why = p.stale(root=tmp_path)
-    assert stale and "missing" in why
-
-
-def test_phase_fresh_output_skips(tmp_path):
-    (tmp_path / "out.json").write_text("{}")
-    p = Phase("x", outputs=["out.json"], cmd=["true"])
-    assert p.stale(root=tmp_path) == (False, "outputs fresh")
-
-
-def test_phase_newer_input_is_stale(tmp_path):
-    out = tmp_path / "out.json"
-    out.write_text("{}")
-    old = time.time() - 3600
-    os.utime(out, (old, old))
-    (tmp_path / "in.csv").write_text("a")
-    p = Phase("x", outputs=["out.json"], inputs=["in.csv"], cmd=["true"])
-    stale, why = p.stale(root=tmp_path)
-    assert stale and "newer" in why
-
-
-def test_phase_missing_input_does_not_block(tmp_path):
-    (tmp_path / "out.json").write_text("{}")
-    p = Phase("x", outputs=["out.json"], inputs=["never_made.csv"], cmd=["true"])
-    assert p.stale(root=tmp_path)[0] is False
-
-
-# -- deadline math -----------------------------------------------------
-
-
-def test_seconds_until_same_day():
-    # now = 10:00:00 UTC -> 11:30 is 5400s away
-    now = time.mktime(time.struct_time((2026, 8, 14, 10, 0, 0, 0, 0, 0))) - time.timezone
-    # build a UTC timestamp for 10:00 via calendar.timegm to avoid tz
-    import calendar
-
-    now = calendar.timegm((2026, 8, 14, 10, 0, 0, 0, 0, 0))
-    assert seconds_until("11:30", now=now) == 5400
-
-
-def test_seconds_until_past_midnight_wraps_forward():
-    import calendar
-
-    # now = 23:30 UTC, deadline "22:50" -> tomorrow, +84000s not -2400s
-    now = calendar.timegm((2026, 8, 14, 23, 30, 0, 0, 0, 0))
-    s = seconds_until("22:50", now=now)
-    assert s == 84000
-    assert s > 0  # the round-6 bug produced a negative budget here
-
-
-# -- failure isolation -------------------------------------------------
-
-
-def test_failed_phase_blocks_dependents_not_siblings(tmp_path, monkeypatch, capsys):
-    import pipeline7
-
-    ran = []
-    phases = [
-        Phase("a", outputs=["a.out"], cmd=["false"]),
-        Phase("b", outputs=["b.out"], cmd=["true"], deps=["a"]),
-        Phase("c", outputs=["c.out"], cmd=["true"]),
-    ]
-
-    def fake_run(self, root=None):
-        ran.append(self.name)
-        if self.name == "c":
-            (tmp_path / "c.out").write_text("")
-        return self.name != "a"
-
-    monkeypatch.setattr(pipeline7, "build_phases", lambda: phases)
-    monkeypatch.setattr(Phase, "stale", lambda self, root=None: (True, "missing"))
-    monkeypatch.setattr(Phase, "run", fake_run)
-    rc = main([])
-    assert rc == 1
-    assert ran == ["a", "c"]  # b blocked, c still ran
-    out = capsys.readouterr().out
-    assert "[blocked] b" in out and "[FAILED]  a" in out
-
-
-def test_dry_run_runs_nothing(monkeypatch, capsys):
-    import pipeline7
-
-    phases = [Phase("a", outputs=["a.out"], cmd=["false"])]
-    monkeypatch.setattr(pipeline7, "build_phases", lambda: phases)
-    monkeypatch.setattr(Phase, "stale", lambda self, root=None: (True, "missing"))
-    rc = main(["--dry-run"])
-    assert rc == 0
-    assert "[would]   a" in capsys.readouterr().out
-
-
-def test_build_phases_wellformed():
-    phases = build_phases()
-    names = [p.name for p in phases]
-    assert len(names) == len(set(names))
-    for p in phases:
-        assert p.outputs
-        for d in p.deps:
-            assert d in names
-        assert (p.cmd is None) == (p.fn is not None)
-
-
-# -- best-model pick ---------------------------------------------------
+from deep_query_optimization_spark.estimator import QueriesDataset
+from tools.filter_workload import filter_dir
+from tools.pick_best_model import collect_candidates, collect_sweep_candidates, pick
 
 
 def _mk_train_root(tmp_path, accs):
@@ -175,8 +62,6 @@ def test_pick_raises_when_nothing_trained(tmp_path):
 def test_sweep_candidates_join_the_pick(tmp_path, monkeypatch):
     """A capacity-sweep config that beats scratch/finetune must win the
     pick, with its (embed x hidden) config recorded in the label."""
-    from pick_best_model import collect_sweep_candidates
-
     train = _mk_train_root(tmp_path, {"gru": 0.6})
     sweep = tmp_path / "sweep"
     for tag, fam, acc in [("gru_64x64", "gru", 0.75), ("mscn_64x64", "mscn", 0.99), ("cnn_96x96", "cnn", 0.62)]:
@@ -208,12 +93,6 @@ def test_sweep_candidates_join_the_pick(tmp_path, monkeypatch):
 def test_filter_workload_drops_heldout_rows(tmp_path):
     """The pretrain-corpus scrub removes exactly the rows whose SQL is
     in a held-out CSV, keeps the rest, and rewrites in place."""
-    import sys
-
-    sys.path.insert(0, "/root/repo")
-    from deep_query_optimization_spark.estimator import QueriesDataset
-    from tools.filter_workload import filter_dir
-
     corpus = tmp_path / "corpus"
     corpus.mkdir()
     ds = QueriesDataset()

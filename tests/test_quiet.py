@@ -1,184 +1,80 @@
-"""Quiet-window sentinel: timed measurements vs background jobs.
-
-The coordination that makes bench contamination structurally impossible
-(two rounds of artifacts were taken under the builder's own corpus
-generators): bench.py raises a sentinel file, every sentinel-honoring
-loop (runner.time rows, training epochs) pauses while it exists.
-"""
+"""``quiet.quiet_window``, the bench-only bounded loadavg wait kept out
+of the library's import graph, and the timing backstops that replaced
+the old sentinel protocol: ``lab.deadline.hard_deadline``, the runner's
+wedge cap and the generator's ``stop_when`` latch."""
 
 import os
+import signal
+import subprocess
+import sys
 import time
+from pathlib import Path
 
 import pytest
 
 from deep_query_optimization_spark import quiet
-from deep_query_optimization_spark.quiet import (
-    quiet_window,
-    sentinel_path,
-    wait_if_quiet_window,
-)
+from deep_query_optimization_spark.lab import executor
+from deep_query_optimization_spark.lab.deadline import HardDeadlineError, hard_deadline
+from deep_query_optimization_spark.lab.executor import SparkQueryRunner
 
 
-@pytest.fixture
-def sentinel(tmp_path, monkeypatch):
-    p = tmp_path / "qw"
-    monkeypatch.setenv("DQO_QUIET_SENTINEL", str(p))
-    monkeypatch.delenv("DQO_QUIET_IGNORE", raising=False)
-    return p
+def test_library_does_not_import_quiet():
+    """Timing, generation and training never consult box state: the
+    quiet-window module stays unloaded after importing them."""
+    code = (
+        "import sys\n"
+        "import deep_query_optimization_spark.engine\n"
+        "import deep_query_optimization_spark.lab\n"
+        "import deep_query_optimization_spark.generator.guided\n"
+        "import deep_query_optimization_spark.estimator.model\n"
+        "print('deep_query_optimization_spark.quiet' in sys.modules)\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=Path(__file__).resolve().parent.parent,
+        capture_output=True,
+        text=True,
+        check=True,
+    )
+    assert out.stdout.strip() == "False"
 
 
-def test_fast_path_no_sentinel(sentinel):
-    assert wait_if_quiet_window() == 0.0
-
-
-def test_waits_while_sentinel_present(sentinel):
-    sentinel.write_text("pid=1\n")
-    # remove the sentinel from a "background" angle: first poll sees it,
-    # second poll doesn't — simulate by removing after a short delay via
-    # the log callback (called exactly once, on first detection)
-    def drop(_msg):
-        sentinel.unlink()
-
-    paused = wait_if_quiet_window(poll_s=0.05, log=drop)
-    assert paused >= 0.05
-
-
-def test_stale_sentinel_ignored_and_removed(sentinel):
-    sentinel.write_text("pid=1\n")
-    old = time.time() - quiet.STALE_S - 60
-    os.utime(sentinel, (old, old))
-    assert wait_if_quiet_window() == 0.0
-    assert not sentinel.exists()  # crashed holder's sentinel cleaned up
-
-
-def test_opt_out_env(sentinel, monkeypatch):
-    sentinel.write_text("pid=1\n")
-    monkeypatch.setenv("DQO_QUIET_IGNORE", "1")
-    assert wait_if_quiet_window() == 0.0
-
-
-def test_quiet_window_raises_and_clears(sentinel):
-    with quiet_window(wait_for_load=None) as load:
-        assert sentinel.exists()
-        assert "pid=" in sentinel.read_text()
-        # the holder's own timed calls must not deadlock on the sentinel
-        assert os.environ.get("DQO_QUIET_IGNORE") == "1"
-        assert wait_if_quiet_window() == 0.0
-        assert load is None or load >= 0.0
-    assert not sentinel.exists()
-    assert os.environ.get("DQO_QUIET_IGNORE") is None
-
-
-def test_quiet_window_clears_on_error(sentinel):
-    with pytest.raises(RuntimeError):
-        with quiet_window(wait_for_load=None):
-            raise RuntimeError("measurement crashed")
-    assert not sentinel.exists()
-
-
-def test_sentinel_path_env_override(sentinel):
-    assert sentinel_path() == str(sentinel)
-
-
-def test_quiet_window_queues_behind_existing_holder(sentinel):
-    """A second measurement must wait for the first's window, never
-    clobber (and then delete) the other holder's sentinel."""
-    import threading
-
-    sentinel.write_text("pid=other\n")
+def test_quiet_window_wait_is_bounded_and_yields_load(monkeypatch):
+    monkeypatch.setattr(quiet, "_read_loadavg", lambda: 50.0)
     t0 = time.monotonic()
-    threading.Timer(0.3, sentinel.unlink).start()
-    orig_sleep = time.sleep
-    # shrink the 5s poll so the test stays fast
-    quiet.time.sleep = lambda s: orig_sleep(min(s, 0.05))
-    try:
-        with quiet_window(wait_for_load=None):
-            waited = time.monotonic() - t0
-            assert waited >= 0.3  # queued behind the other holder
-            assert "pid=other" not in sentinel.read_text()
-    finally:
-        quiet.time.sleep = orig_sleep
-    assert not sentinel.exists()
+    with quiet.quiet_window(wait_for_load=2.0, wait_timeout_s=0.3) as load:
+        waited = time.monotonic() - t0
+    assert load == 50.0
+    assert 0.3 <= waited < 1.5  # the last poll is cut to the time left
 
-
-def test_nested_quiet_window_does_not_self_deadlock(sentinel):
-    with quiet_window(wait_for_load=None):
-        with quiet_window(wait_for_load=None):
-            assert sentinel.exists()
-    assert not sentinel.exists()
-
-
-def test_hold_quiet_window_refreshes_past_staleness(sentinel, monkeypatch):
-    """An hours-long corpus generation must keep the sentinel LIVE:
-    the refresh thread bumps mtime, so even with the staleness guard
-    shrunk to fractions of a second the sentinel is never reclaimed —
-    and it is removed promptly on exit."""
-    from deep_query_optimization_spark.quiet import hold_quiet_window
-
-    monkeypatch.setattr(quiet, "STALE_S", 0.2)
-    with hold_quiet_window(refresh_s=0.05, wait_for_load=None):
-        time.sleep(0.5)  # > STALE_S: unrefreshed it would be reclaimed
-        assert quiet._sentinel_age() is not None  # still live
-        assert sentinel.exists()
-    assert not sentinel.exists()
-    # after exit the refresher is stopped: nothing recreates the file
-    time.sleep(0.15)
-    assert not sentinel.exists()
-
-
-def test_dead_holder_sentinel_removed_immediately(sentinel):
-    """A SIGKILLed holder can't clean up; waiters must reclaim its
-    sentinel on sight instead of queuing STALE_S behind a corpse."""
-    import subprocess
-
-    p = subprocess.Popen(["sleep", "60"])
-    p.kill()
-    p.wait()
-    sentinel.write_text(f"pid={p.pid} t=123\n")  # fresh mtime, dead pid
-    assert wait_if_quiet_window() == 0.0
-    assert not sentinel.exists()
-
-
-def test_pidless_sentinel_falls_back_to_mtime(sentinel):
-    """A sentinel without a parseable pid keeps the mtime-only
-    semantics: fresh -> still honored."""
-    sentinel.write_text("something else\n")
-
-    def drop(_msg):
-        sentinel.unlink()
-
-    assert wait_if_quiet_window(poll_s=0.05, log=drop) >= 0.05
+    # a calm box passes straight through
+    monkeypatch.setattr(quiet, "_read_loadavg", lambda: 0.5)
+    t0 = time.monotonic()
+    with quiet.quiet_window(wait_for_load=2.0, wait_timeout_s=60.0) as load:
+        assert time.monotonic() - t0 < 1.0
+    assert load == 0.5
 
 
 def test_hard_deadline_breaks_a_wedged_call():
     """SIGALRM backstop: a call blocked past the deadline is broken by
     HardDeadlineError in the main thread; completed state survives for
     the caller's checkpoint. On time, the timer is disarmed cleanly."""
-    import time as _time
-
-    from deep_query_optimization_spark.quiet import HardDeadlineError, hard_deadline
-
     done = []
     with pytest.raises(HardDeadlineError):
         with hard_deadline(0.2):
             done.append(1)
-            _time.sleep(5)  # the wedge: sleeps well past the deadline
+            time.sleep(5)  # the wedge: sleeps well past the deadline
             done.append(2)
     assert done == [1]  # work before the wedge survives
 
     # a loop that finishes in time exits normally and disarms the alarm
     with hard_deadline(5.0):
         done.append(3)
-    _time.sleep(0.3)  # an undisarmed 0.2s timer would fire here
+    time.sleep(0.3)  # an undisarmed 0.2s timer would fire here
     assert done == [1, 3]
 
 
-# -- round-8 additions: nested hard_deadline + wedge-cap drain ----------
-
-
 def test_hard_deadline_nests_inner_fires_first():
-    from deep_query_optimization_spark.quiet import HardDeadlineError, hard_deadline
-
     with hard_deadline(30.0):
         with pytest.raises(HardDeadlineError):
             with hard_deadline(0.2):
@@ -189,8 +85,6 @@ def test_hard_deadline_nests_inner_fires_first():
 
 
 def test_hard_deadline_outer_restored_and_still_fires():
-    from deep_query_optimization_spark.quiet import HardDeadlineError, hard_deadline
-
     t0 = time.monotonic()
     with pytest.raises(HardDeadlineError):
         with hard_deadline(0.8):
@@ -202,20 +96,13 @@ def test_hard_deadline_outer_restored_and_still_fires():
 
 def test_hard_deadline_completion_race_not_raised():
     """A SIGALRM landing after the body finished must not raise for a
-    run that completed on time (the armed-flag guard)."""
-    import signal
+    run that completed on time (the armed-flag guard).
 
-    from deep_query_optimization_spark.quiet import hard_deadline
-
-    # deadline just past the body: the timer is near-zero when the
-    # finally runs — historically this raced and raised a phantom
-    # expiry; with the armed guard it never does. On a loaded box
-    # sleep(0.019) can legitimately overrun the 0.02 s deadline (r9:
-    # the harvest fine-tune at 92% CPU failed this test, then 19/19
-    # passed isolated) — a LEGITIMATE expiry is not the phantom this
-    # test pins, so only a raise for a body that finished in time fails.
-    from deep_query_optimization_spark.quiet import HardDeadlineError
-
+    The deadline sits just past the body, so the timer is near zero
+    when the finally runs. On a loaded box sleep(0.019) can
+    legitimately overrun the 0.02 s deadline; a legitimate expiry is
+    not the phantom this test pins, so only a raise for a body that
+    finished in time fails."""
     for _ in range(20):
         t0 = time.monotonic()
         try:
@@ -226,28 +113,30 @@ def test_hard_deadline_completion_race_not_raised():
     assert signal.getitimer(signal.ITIMER_REAL)[0] == 0.0
 
 
+def _wedge_runner(monkeypatch, inner):
+    """A bare SparkQueryRunner whose timed run is ``inner``, with the
+    production wedge-cap pad shrunk so the cap fires in a fraction of a
+    second."""
+    monkeypatch.setattr(executor, "WEDGE_CAP_PAD_S", 0.2)
+    runner = SparkQueryRunner.__new__(SparkQueryRunner)
+    runner.timeout_s = 0.1
+    runner.wedge_cap_factor = 0.5
+    runner.wedged = False
+    monkeypatch.setattr(runner, "_run_timed_inner", inner)
+    return runner
+
+
 def test_wedged_runner_drains_within_cap(monkeypatch):
     """A query the watchdog cannot cancel (simulated: _run_timed_inner
     blocks far past timeout_s) is censored at the per-query SIGALRM cap
     and latches ``wedged`` — the generation loop's stop_when then exits
     instead of waiting for the whole-budget backstop."""
-    from deep_query_optimization_spark.lab.executor import SparkQueryRunner
-
-    runner = SparkQueryRunner.__new__(SparkQueryRunner)
-    runner.timeout_s = 0.1
-    runner.wedge_cap_factor = 0.5
-    runner.wedged = False
 
     def _wedge(df):
         time.sleep(120.0)  # ignores every cooperative cancel
         return 120.0
 
-    monkeypatch.setattr(runner, "_run_timed_inner", _wedge)
-    # shrink the +30s safety pad for the test
-    monkeypatch.setattr(
-        "deep_query_optimization_spark.lab.executor.SparkQueryRunner._run_timed",
-        _patched_run_timed,
-    )
+    runner = _wedge_runner(monkeypatch, _wedge)
     t0 = time.monotonic()
     elapsed = runner._run_timed(object())
     assert runner.wedged
@@ -255,22 +144,22 @@ def test_wedged_runner_drains_within_cap(monkeypatch):
     assert elapsed == pytest.approx(time.monotonic() - t0, abs=1.0)
 
 
-def _patched_run_timed(self, df):
-    """_run_timed with the production +30s pad shrunk to +0.2s so the
-    wedge test completes in under a second."""
-    import threading as _threading
+def test_wedge_detected_when_error_is_rewrapped(monkeypatch):
+    """py4j converts an exception escaping its socket wait into its own
+    error type — a masked expiry must still censor + latch wedged."""
 
-    from deep_query_optimization_spark.quiet import HardDeadlineError, hard_deadline
-
-    if self.wedge_cap_factor > 0 and _threading.current_thread() is _threading.main_thread():
-        t0 = time.perf_counter()
+    def _wedge_rewrapping(df):
         try:
-            with hard_deadline(self.timeout_s * self.wedge_cap_factor + 0.2):
-                return self._run_timed_inner(df)
-        except HardDeadlineError:
-            self.wedged = True
-            return time.perf_counter() - t0
-    return self._run_timed_inner(df)
+            time.sleep(120.0)
+        except Exception:
+            raise RuntimeError("An error occurred while calling o1.save")
+
+    runner = _wedge_runner(monkeypatch, _wedge_rewrapping)
+    t0 = time.monotonic()
+    elapsed = runner._run_timed(object())
+    assert runner.wedged
+    assert time.monotonic() - t0 < 5.0
+    assert elapsed > 0
 
 
 def test_stop_when_halts_balanced_generation():
@@ -291,54 +180,3 @@ def test_stop_when_halts_balanced_generation():
     bal = BalancedQueryGen(db, runner, seed=7, stop_when=lambda: calls[0] >= 3)
     bal.generate(500, time_budget_s=30.0)
     assert calls[0] <= 4  # stopped by the latch, not the target
-
-
-def test_wedge_detected_when_error_is_rewrapped(monkeypatch):
-    """py4j converts an exception escaping its socket wait into its own
-    error type — a masked expiry must still censor + latch wedged."""
-    from deep_query_optimization_spark.lab.executor import SparkQueryRunner
-
-    runner = SparkQueryRunner.__new__(SparkQueryRunner)
-    runner.timeout_s = 0.1
-    runner.wedge_cap_factor = 0.5
-    runner.wedged = False
-
-    def _wedge_rewrapping(df):
-        try:
-            time.sleep(120.0)
-        except Exception:
-            raise RuntimeError("An error occurred while calling o1.save")
-
-    monkeypatch.setattr(runner, "_run_timed_inner", _wedge_rewrapping)
-    monkeypatch.setattr(
-        "deep_query_optimization_spark.lab.executor.SparkQueryRunner._run_timed",
-        _patched_run_timed_rewrap,
-    )
-    t0 = time.monotonic()
-    elapsed = runner._run_timed(object())
-    assert runner.wedged
-    assert time.monotonic() - t0 < 5.0
-    assert elapsed > 0
-
-
-def _patched_run_timed_rewrap(self, df):
-    """Production _run_timed with the +30s pad shrunk for test speed."""
-    import threading as _threading
-
-    from deep_query_optimization_spark.quiet import HardDeadlineError, hard_deadline
-
-    if self.wedge_cap_factor > 0 and _threading.current_thread() is _threading.main_thread():
-        t0 = time.perf_counter()
-        hd = {"expired": False}
-        try:
-            with hard_deadline(self.timeout_s * self.wedge_cap_factor + 0.2) as hd:
-                return self._run_timed_inner(df)
-        except HardDeadlineError:
-            self.wedged = True
-            return time.perf_counter() - t0
-        except Exception:
-            if hd["expired"]:
-                self.wedged = True
-                return time.perf_counter() - t0
-            raise
-    return self._run_timed_inner(df)

@@ -1,4 +1,4 @@
-"""Round-10 tooling pins: atomic sf10 staging + calib-share discount."""
+"""tools/stage_sf10.py pins: atomic sf10 staging + calib-share discount."""
 
 from __future__ import annotations
 

@@ -58,6 +58,8 @@ from deep_query_optimization_spark.engine import DQOEngine  # noqa: E402
 from deep_query_optimization_spark.estimator import QueriesDataset  # noqa: E402
 from deep_query_optimization_spark.generator.guided import BalancedQueryGen  # noqa: E402
 from deep_query_optimization_spark.generator.partitioner import Log2Partitioner  # noqa: E402
+from deep_query_optimization_spark.lab.deadline import HardDeadlineError, hard_deadline  # noqa: E402
+from deep_query_optimization_spark.lab.executor import WEDGE_CAP_PAD_S  # noqa: E402
 from deep_query_optimization_spark.session import get_spark  # noqa: E402
 
 
@@ -83,10 +85,11 @@ def main() -> None:
     engine.runner.double_run = os.environ.get("DQO_DOUBLE_RUN", "0") == "1"
 
     # per-query SIGALRM cap: a query the watchdog cannot cancel is
-    # censored at 3x timeout (+30 s) and latches runner.wedged — the
-    # loop below then checkpoints and exits instead of holding the
-    # budget hostage (round-7 postmortem: one wedged sf10 query ran
-    # 12+ min past budget before the whole-run backstop fired)
+    # censored at 3x timeout (+WEDGE_CAP_PAD_S) and latches
+    # runner.wedged — the loop below then checkpoints and exits
+    # instead of holding the budget hostage (round-7 postmortem: one
+    # wedged sf10 query ran 12+ min past budget before the whole-run
+    # backstop fired)
     engine.runner.wedge_cap_factor = 3.0
 
     from deep_query_optimization_spark.relational.parser import parse_sql
@@ -130,23 +133,6 @@ def main() -> None:
         )
         print(f"resuming from {len(prev.rows)} existing rows")
 
-    # DQO_HOLD_QUIET=1: this run's labels are the product — raise the
-    # quiet-window sentinel for the WHOLE generation (refreshed past
-    # the staleness guard) so sentinel-honoring background jobs
-    # (trainer epochs, relabel rows) pause instead of contaminating
-    # the timings. Off by default: a casual generation shouldn't
-    # freeze the rest of the machine.
-    import contextlib
-
-    hold = contextlib.ExitStack()
-    if os.environ.get("DQO_HOLD_QUIET") == "1":
-        from deep_query_optimization_spark.quiet import hold_quiet_window
-
-        load = hold.enter_context(hold_quiet_window())
-        print(f"holding quiet window for the full run (loadavg at start {load})", flush=True)
-
-    from deep_query_optimization_spark.quiet import HardDeadlineError, hard_deadline
-
     deadline = time.monotonic() + budget_s
     t0 = time.monotonic()
 
@@ -166,9 +152,9 @@ def main() -> None:
     # backstop below then only catches pathologies the per-query cap
     # itself missed
     runs = 2 if engine.runner.double_run else 1
-    worst_row_s = (timeout_s * engine.runner.wedge_cap_factor + 30.0) * runs
+    worst_row_s = (timeout_s * engine.runner.wedge_cap_factor + WEDGE_CAP_PAD_S) * runs
     try:
-        with hold, hard_deadline(budget_s + grace):
+        with hard_deadline(budget_s + grace):
             while len(bal.dataset) < n and time.monotonic() + worst_row_s < deadline + grace:
                 target = min(n, len(bal.dataset) + every)
                 bal.generate(target, time_budget_s=deadline - time.monotonic())

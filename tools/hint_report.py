@@ -238,7 +238,6 @@ if __name__ == "__main__":
     from deep_query_optimization_spark.quiet import quiet_window
 
     # default-vs-hinted timings are only evidence on a quiet box:
-    # hold the sentinel so background jobs (relabel rows, training
-    # epochs) pause for the measurement's duration
+    # wait (bounded) for the load average to settle before measuring
     with quiet_window():
         main()

@@ -69,12 +69,9 @@ def main() -> None:
         print(f"resuming: {len(done)} rows already relabeled in {out_csv}", flush=True)
     moved = 0
     t0 = time.monotonic()
-    from deep_query_optimization_spark.quiet import wait_if_quiet_window
-
     for i, (sql, rt_old, plan) in enumerate(ds.rows):
         if sql in done:
             continue
-        wait_if_quiet_window()  # never time a row inside someone's bench window
         rt_new = engine.runner.time(sql)
         out.add(sql, rt_new, plan)
         moved += bucketize(rt_old) != bucketize(rt_new)

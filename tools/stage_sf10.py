@@ -156,7 +156,7 @@ def main() -> None:
     out = Path(sys.argv[1]) if len(sys.argv) > 1 else REPO / ".data/est_sf10_best"
     cands = candidate_acc()
     if not cands:
-        raise SystemExit("no sf10-capable model found (run pipeline9 sf10_ft phase first)")
+        raise SystemExit("no sf10-capable model found (fine-tune one with tools/finetune_estimator.py first)")
     # candidates report accuracy on the test split they were trained
     # against; each round's re-split changes the sf10 test set, so
     # cross-era numbers are not comparable. Restrict the tournament to
