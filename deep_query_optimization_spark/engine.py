@@ -8,7 +8,8 @@ an estimator → score queries. This class is that lifecycle on Spark:
     engine.snapshot()                      # schema + stats (cached JSON)
     rows = engine.generate_workload(1000)  # balanced labeled dataset
     model = engine.train_estimator(rows)   # plan-vector cost model
-    engine.estimate("SELECT ...")          # predicted log2 runtime
+    engine.estimate("SELECT ...")          # predicted runtime (s)
+    engine.estimate_many([sql1, sql2])     # same, plans encoded concurrently
     engine.run("SELECT ...")               # timed execution
 
 Every step is also usable directly from its module; the facade is for
@@ -21,6 +22,9 @@ from __future__ import annotations
 import json
 import logging
 import os
+from collections import OrderedDict
+from concurrent.futures import ThreadPoolExecutor, wait
+from typing import NamedTuple
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
@@ -33,7 +37,22 @@ from deep_query_optimization_spark.generator.partitioner import Log2Partitioner
 from deep_query_optimization_spark.lab.executor import QueryLog, SparkQueryRunner
 from deep_query_optimization_spark.plans import PlanEncoder
 from deep_query_optimization_spark.plans.parser import parse_plan_json
+from deep_query_optimization_spark.session import default_parallelism
 from deep_query_optimization_spark.stats import collect_stats
+
+# Memoized plan encodings per engine, LRU. Corpus encodings are 4.8 KB
+# at the median and 15 KB at most, so a full memo holds about 16 MB.
+ENCODE_MEMO_SIZE = 1024
+
+
+class EncodeCacheInfo(NamedTuple):
+    """``DQOEngine.encode_cache_info()``, in the style of
+    ``functools.lru_cache``'s ``cache_info()``."""
+
+    hits: int
+    misses: int
+    size: int
+    capacity: int
 
 
 class DQOEngine:
@@ -54,6 +73,11 @@ class DQOEngine:
         log = QueryLog(log_path) if log_path else None
         self.runner = SparkQueryRunner(spark, clear_cache=False, log=log)
         self._encoder: PlanEncoder | None = None
+        # (kind, sql) -> encoding; written only by the calling thread
+        self._memo: OrderedDict[tuple[str, str], tuple] = OrderedDict()
+        self._memo_hits = 0
+        self._memo_misses = 0
+        self._pool: ThreadPoolExecutor | None = None
         self.model: MLPCostModel | None = None
         # latched True after a failed checkpoint probe: default-on
         # hints degrade to pass-through without re-hitting the fs
@@ -63,12 +87,19 @@ class DQOEngine:
 
     def snapshot(self, use_cache: bool = True) -> Database:
         if use_cache and self.snapshot_path and os.path.exists(self.snapshot_path):
-            self.db = Database.load(self.snapshot_path)
+            self._set_db(Database.load(self.snapshot_path))
             return self.db
-        self.db = Database([collect_stats(df, name) for name, df in self.tables.items()])
+        self._set_db(Database([collect_stats(df, name) for name, df in self.tables.items()]))
         if self.snapshot_path:
             self.db.save(self.snapshot_path)
         return self.db
+
+    def _set_db(self, db: Database) -> None:
+        # encodings featurize the stats: a new snapshot needs a new
+        # encoder, and no encoding memoized from the old one may be served
+        self.db = db
+        self._encoder = None
+        self._memo.clear()
 
     @property
     def encoder(self) -> PlanEncoder:
@@ -246,16 +277,60 @@ class DQOEngine:
     # -- estimator (reference estimator/*/train_tpch.py) -----------------
 
     def encode_sql(self, sql: str) -> tuple[np.ndarray, np.ndarray]:
-        df = self.spark.sql(sql)
-        plan_json = df._jdf.queryExecution().optimizedPlan().toJSON()
-        return self.encoder.encode_plan(parse_plan_json(plan_json))
+        """(ids, mat) of the optimized plan. Memoized per engine: the
+        arrays are shared with later calls, so they are read-only."""
+        return self._encodings("plan", [sql])[sql]
 
     def encode_sql_tree(self, sql: str):
         """(ids, mat, children) with tree structure preserved — the
-        TreeLSTM input (reference treelstm/v1/childsum.py)."""
-        df = self.spark.sql(sql)
-        plan_json = df._jdf.queryExecution().optimizedPlan().toJSON()
-        return self.encoder.encode_tree(parse_plan_json(plan_json))
+        TreeLSTM input (reference treelstm/v1/childsum.py). Memoized
+        like ``encode_sql``."""
+        return self._encodings("tree", [sql])[sql]
+
+    def _encodings(self, kind: str, sqls: list[str]) -> dict[str, tuple]:
+        """The encoding of each distinct SQL of ``sqls``, from the memo
+        or by one plan round-trip each; several round-trips run
+        concurrently on the encode pool. Only the calling thread touches
+        the memo, which is not locked: an engine serves one caller
+        thread at a time."""
+        encoder = self.encoder  # built here, never on a pool thread
+        out: dict[str, tuple] = {}
+        missing = []
+        for sql in dict.fromkeys(sqls):
+            enc = self._memo.get((kind, sql))
+            if enc is None:
+                missing.append(sql)
+            else:
+                self._memo.move_to_end((kind, sql))
+                out[sql] = enc
+        self._memo_hits += len(sqls) - len(missing)
+        self._memo_misses += len(missing)
+        encs = []
+        if len(missing) == 1:
+            encs = [_encode(self.spark, encoder, kind, missing[0])]
+        elif missing:
+            pool = self._encode_pool()
+            futures = [pool.submit(_encode, self.spark, encoder, kind, sql) for sql in missing]
+            wait(futures)  # no encode outlives the call, even on failure
+            encs = [f.result() for f in futures]  # the first failure, in input order
+        for sql, enc in zip(missing, encs):
+            for arr in enc[:2]:
+                arr.flags.writeable = False
+            self._memo[(kind, sql)] = out[sql] = enc
+            if len(self._memo) > ENCODE_MEMO_SIZE:
+                self._memo.popitem(last=False)
+        return out
+
+    def _encode_pool(self) -> ThreadPoolExecutor:
+        if self._pool is None:
+            self._pool = ThreadPoolExecutor(default_parallelism(), thread_name_prefix="dqo-encode")
+        return self._pool
+
+    def encode_cache_info(self) -> EncodeCacheInfo:
+        """Hits and misses of the encoding memo under ``encode_sql``,
+        ``encode_sql_tree`` and ``estimate_many``; a miss is one Spark
+        plan round-trip."""
+        return EncodeCacheInfo(self._memo_hits, self._memo_misses, len(self._memo), ENCODE_MEMO_SIZE)
 
     def train_estimator(
         self,
@@ -368,16 +443,38 @@ class DQOEngine:
         whole reason to exist, served from the live engine. Structural
         models (TreeLSTM, Gerelt4) are detected by their ``children``
         forward argument and fed the tree encoding."""
+        encode = self.encode_sql_tree if self._encoding_kind() == "tree" else self.encode_sql
+        return self._predict_s(encode(sql))
+
+    def estimate_many(self, sqls: list[str]) -> list[float]:
+        """``[estimate(s) for s in sqls]``, bit for bit, with the plan
+        round-trips of the distinct SQL not yet memoized run
+        concurrently. Predictions run on the calling thread, one model
+        forward per plan, in input order. If a SQL fails to plan, the
+        error of the first failing one is raised."""
+        encs = self._encodings(self._encoding_kind(), sqls)
+        return [self._predict_s(encs[sql]) for sql in sqls]
+
+    def _encoding_kind(self) -> str:
         if self.model is None:
             raise RuntimeError("train_estimator or load_estimator first")
         import inspect
 
-        needs_children = "children" in inspect.signature(self.model.forward).parameters
-        encode = self.encode_sql_tree if needs_children else self.encode_sql
-        pred_log2 = self.model.predict([encode(sql)])[0]
+        return "tree" if "children" in inspect.signature(self.model.forward).parameters else "plan"
+
+    def _predict_s(self, enc) -> float:
+        pred_log2 = self.model.predict([enc])[0]
         return float(2.0 ** np.clip(pred_log2, -10, 20))
 
     def estimate_bucket(self, sql: str) -> int:
         from deep_query_optimization_spark.plans.hints import log2_bucket
 
         return log2_bucket(self.estimate(sql))
+
+
+def _encode(spark: SparkSession, encoder: PlanEncoder, kind: str, sql: str) -> tuple:
+    """One plan round-trip, planning only (safe on any thread): the
+    optimized plan's JSON, parsed and encoded as ``kind``."""
+    plan_json = spark.sql(sql)._jdf.queryExecution().optimizedPlan().toJSON()
+    root = parse_plan_json(plan_json)
+    return encoder.encode_tree(root) if kind == "tree" else encoder.encode_plan(root)

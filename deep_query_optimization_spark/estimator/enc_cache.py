@@ -19,6 +19,12 @@ go through temp + ``os.replace`` so readers never see a torn file, and
 last-writer-wins is safe because identical keys map to identical
 values.
 
+Layering: this disk cache wraps ``engine.encode_sql`` /
+``encode_sql_tree``, which have an in-memory, per-engine LRU memo of
+their own (``DQOEngine.encode_cache_info()``). The memo sits under this
+cache: it saves repeated round-trips within one process and is dropped
+on every re-snapshot; this cache persists across processes.
+
 Opt in via ``DQO_ENC_CACHE=<path>`` in the training tools.
 """
 

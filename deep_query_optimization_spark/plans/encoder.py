@@ -86,10 +86,31 @@ class PlanEncoder:
             self.COL_DIM + self.REL_DIM + 11 + 11 + 5 + 5 + 4,
             2 * (self.COL_DIM + self.REL_DIM) + 5,
         )
+        # bare column name -> its first (table, column) in db.tables
+        # order: a condition's JSON is tokenized into hundreds of names
+        self._columns_by_name: dict[str, tuple[str, str]] = {}
+        for t in db.tables:
+            for c in t.columns:
+                self._columns_by_name.setdefault(c.name, (t.name, c.name))
+        # column/relation vectors are pure functions of the snapshot;
+        # cached read-only so no caller can corrupt a shared entry
+        self._column_vectors: dict[tuple[str, str], np.ndarray] = {}
+        self._relation_vectors: dict[str, np.ndarray] = {}
+
+    def find_column(self, name: str) -> tuple[str, str] | None:
+        """(table, column) of the first column called ``name`` (any
+        qualifier and backticks dropped) in ``db.tables`` order."""
+        return self._columns_by_name.get(name.split(".")[-1].strip("`"))
 
     # -- column (13) ---------------------------------------------------
 
     def column_vector(self, table: str, column: str) -> np.ndarray:
+        v = self._column_vectors.get((table, column))
+        if v is None:
+            v = self._column_vectors[(table, column)] = _frozen(self._column_vector(table, column))
+        return v
+
+    def _column_vector(self, table: str, column: str) -> np.ndarray:
         v = np.zeros(self.COL_DIM)
         try:
             col = self.db[table][column]
@@ -116,6 +137,12 @@ class PlanEncoder:
     # -- relation (25) -------------------------------------------------
 
     def relation_vector(self, table: str) -> np.ndarray:
+        v = self._relation_vectors.get(table)
+        if v is None:
+            v = self._relation_vectors[table] = _frozen(self._relation_vector(table))
+        return v
+
+    def _relation_vector(self, table: str) -> np.ndarray:
         v = np.zeros(self.REL_DIM)
         try:
             t = self.db[table]
@@ -235,10 +262,10 @@ class PlanEncoder:
             v[: len(rv)] = rv
             return v
         if node.kind == "selection":
-            table, column, op, value = _parse_condition(self.db, node.condition)
+            table, column, op, value = _parse_condition(self.find_column, node.condition)
             return self.selection_vector(table, column, op, value)
         if node.kind == "join":
-            cols = _condition_columns(self.db, node.condition)
+            cols = _condition_columns(self.find_column, node.condition)
             if len(cols) >= 2:
                 (lt, lc), (rt, rc) = cols[0], cols[1]
                 return self.join_vector(lt, lc, rt, rc)
@@ -246,7 +273,7 @@ class PlanEncoder:
         if node.kind in ("projection", "aggregation"):
             cols = []
             for name in node.columns:
-                hit = _find_column(self.db, name)
+                hit = self.find_column(name)
                 if hit:
                     cols.append(hit)
             return self.projection_vector(cols, node.kind == "aggregation")
@@ -306,23 +333,19 @@ def _guess_table(db: Database, columns: list[str]) -> str:
     return ""
 
 
-def _find_column(db: Database, name: str) -> tuple[str, str] | None:
-    bare = name.split(".")[-1].strip("`")
-    for t in db.tables:
-        for c in t.columns:
-            if c.name == bare:
-                return (t.name, c.name)
-    return None
+def _frozen(v: np.ndarray) -> np.ndarray:
+    v.flags.writeable = False
+    return v
 
 
 _COND_RE = re.compile(r"([A-Za-z_][A-Za-z0-9_]*)")
 
 
-def _condition_columns(db: Database, condition: str) -> list[tuple[str, str]]:
+def _condition_columns(find_column, condition: str) -> list[tuple[str, str]]:
     out = []
     seen = set()
     for tok in _COND_RE.findall(condition or ""):
-        hit = _find_column(db, tok)
+        hit = find_column(tok)
         if hit and hit not in seen:
             seen.add(hit)
             out.append(hit)
@@ -344,8 +367,8 @@ _CLASS_TO_OP = {
 }
 
 
-def _parse_condition(db: Database, condition: str) -> tuple[str, str, str, object]:
-    cols = _condition_columns(db, condition)
+def _parse_condition(find_column, condition: str) -> tuple[str, str, str, object]:
+    cols = _condition_columns(find_column, condition)
     table, column = cols[0] if cols else ("", "")
     op = "="
     for m in _OP_CLASS_RE.finditer(condition or ""):

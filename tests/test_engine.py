@@ -2,7 +2,16 @@
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
+
+
+def _stub_estimates(engine, fn):
+    """Serve ``fn`` as the engine's estimates, one at a time and in
+    batches (the hint scores its candidates through ``estimate_many``)."""
+    engine.estimate = fn
+    engine.estimate_many = lambda sqls: [fn(s) for s in sqls]
 
 
 @pytest.mark.slow
@@ -125,21 +134,21 @@ def test_engine_optimize_sql_regime_gated(spark, sf_dir, tmp_path):
         # canonical FROM order looks expensive, every reorder cheap
         return 32.0 if s.split(" FROM ")[1].split(" WHERE ")[0] == canonical_from else 4.0
 
-    engine.estimate = fake_estimate
+    _stub_estimates(engine, fake_estimate)
 
     # flat margin (calibration explicitly disabled): override taken
     chosen = engine.optimize_sql(sql, calibration="")
     assert chosen.split(" FROM ")[1].split(" WHERE ")[0] != canonical_from
 
     # hold-fire regime: default under min_default_s -> input unchanged
-    engine.estimate = lambda s: 1.5
+    _stub_estimates(engine, lambda s: 1.5)
     assert engine.optimize_sql(sql, calibration="") == sql
 
     # abstain: default predicted bucket 5 absent from the calibration
     # table -> the CALLER's text comes back byte-identical despite the
     # 8x predicted win (no-override means pass-through, not a canonical
     # re-emission of the caller's query)
-    engine.estimate = fake_estimate
+    _stub_estimates(engine, fake_estimate)
     calib = tmp_path / "calib.json"
     calib.write_text(
         json.dumps({"per_bucket_predicted": {"2": {"n": 50, "bucket_accuracy": 0.9}}})
@@ -198,8 +207,9 @@ def test_engine_optimize_sql_group_by_candidates_runnable(spark, sf_dir, tmp_pat
     # the chosen emission must itself be runnable and equivalent
     engine.model = object()
     canonical_from = q.to_sql().split(" FROM ")[1].split(" WHERE ")[0]
-    engine.estimate = lambda s: (
-        32.0 if s.split(" FROM ")[1].split(" WHERE ")[0] == canonical_from else 4.0
+    _stub_estimates(
+        engine,
+        lambda s: 32.0 if s.split(" FROM ")[1].split(" WHERE ")[0] == canonical_from else 4.0,
     )
     chosen = engine.optimize_sql(sql, calibration="")
     assert chosen != sql
@@ -221,7 +231,7 @@ def test_engine_optimize_sql_passthrough_and_never_raises(spark, sf_dir, tmp_pat
         "where lineitem.l_orderkey = orders.o_orderkey"
     )  # deliberately non-canonical spelling: pass-through must preserve it
 
-    engine.estimate = lambda s: 32.0  # all candidates equal -> no win
+    _stub_estimates(engine, lambda s: 32.0)  # all candidates equal -> no win
     assert engine.optimize_sql(sql, calibration="") == sql
 
     calls = {"n": 0}
@@ -232,7 +242,7 @@ def test_engine_optimize_sql_passthrough_and_never_raises(spark, sf_dir, tmp_pat
             raise RuntimeError("candidate estimation blew up")
         return 32.0
 
-    engine.estimate = exploding
+    _stub_estimates(engine, exploding)
     assert engine.optimize_sql(sql, calibration="") == sql
 
 
@@ -295,3 +305,119 @@ def test_engine_run_hints_default_on_fails_closed(spark, sf_dir, tmp_path, monke
     rt = engine.run(sql)  # the default path end-to-end, no checkpoint
     assert rt > 0
     assert probes["n"] == 1
+
+
+SNAPSHOT = Path(__file__).resolve().parent.parent / "deep_query_optimization_spark" / "snapshots" / "sf0.01_schema.json"
+JOIN3 = (
+    "SELECT MIN(lineitem.l_quantity) AS m FROM lineitem, orders, customer "
+    "WHERE lineitem.l_orderkey = orders.o_orderkey "
+    "AND orders.o_custkey = customer.c_custkey"
+)
+
+
+def _packaged_stats_engine(spark, sf_dir):
+    from deep_query_optimization_spark.engine import DQOEngine
+
+    engine = DQOEngine(spark, sf_dir, snapshot_path=str(SNAPSHOT))
+    engine.snapshot()  # the file exists: loaded, never rewritten
+    return engine
+
+
+@pytest.fixture(scope="module")
+def served(spark, sf_dir):
+    """An engine on the packaged sf0.01 stats serving a small MLP fitted
+    on a handful of plans."""
+    from deep_query_optimization_spark.estimator.model import MLPCostModel
+
+    engine = _packaged_stats_engine(spark, sf_dir)
+    train = [
+        ("SELECT COUNT(*) AS c FROM orders", 0.2),
+        ("SELECT COUNT(*) AS c FROM lineitem", 0.5),
+        ("SELECT MIN(l_quantity) AS m FROM lineitem WHERE l_quantity > 30", 0.4),
+        (JOIN3, 4.0),
+    ]
+    model = MLPCostModel(in_dim=engine.encoder.width, seed=0)
+    model.fit([engine.encode_sql(sql) for sql, _ in train], [r for _, r in train], epochs=20)
+    engine.model = model
+    return engine
+
+
+def test_estimate_many_matches_serial_estimates_in_order(served, spark, sf_dir):
+    """estimate_many encodes concurrently yet returns, bit for bit and in
+    input order, what one-at-a-time estimates on a fresh engine give."""
+    s1 = "SELECT MIN(o_totalprice) AS m FROM orders WHERE o_totalprice > 1000"
+    s2 = "SELECT MAX(c_acctbal) AS m FROM customer WHERE c_nationkey = 3"
+    s3 = (
+        "SELECT MIN(orders.o_totalprice) AS m FROM orders, customer "
+        "WHERE orders.o_custkey = customer.c_custkey AND customer.c_acctbal > 0"
+    )
+    sqls = [s1, s2, s1, s3]
+    many = served.estimate_many(sqls)
+
+    serial = _packaged_stats_engine(spark, sf_dir)
+    serial.model = served.model
+    assert many == [serial.estimate(sql) for sql in sqls]
+    assert many == [served.estimate(sql) for sql in sqls]
+    assert served.estimate_many([]) == []
+
+
+def test_estimate_many_failure_raises_and_pool_survives(served, monkeypatch):
+    """One SQL failing analysis makes estimate_many raise its error and
+    the hint return the caller's text; the next hint on the same engine
+    still scores every candidate on the pool."""
+    from pyspark.sql.utils import AnalysisException
+
+    from deep_query_optimization_spark.plans import hints
+
+    bad = "SELECT no_such_column FROM orders"
+    with pytest.raises(AnalysisException):
+        served.estimate_many(["SELECT COUNT(*) AS c FROM region", bad, "SELECT COUNT(*) AS c FROM nation"])
+
+    variants = hints.order_variants
+    monkeypatch.setattr(hints, "order_variants", lambda q, limit=6, seed=0: variants(q, limit, seed) + [bad])
+    assert served.optimize_sql(JOIN3, min_default_s=0.0, calibration="") == JOIN3
+    monkeypatch.undo()
+
+    before = served.encode_cache_info()
+    served.optimize_sql(JOIN3, min_default_s=0.0, calibration="")
+    after = served.encode_cache_info()
+    # the gate's estimate and the canonical candidate hit the memo; the
+    # five other orders of the three relations were encoded and kept
+    assert after.hits - before.hits == 2
+    assert after.misses - before.misses == 5
+    assert after.size - before.size == 5
+
+
+def test_repeated_estimate_is_a_memo_hit(served):
+    sql = "SELECT MAX(p_retailprice) AS m FROM part"
+    before = served.encode_cache_info()
+    first = served.estimate(sql)
+    assert served.estimate(sql) == first
+    after = served.encode_cache_info()
+    assert (after.hits - before.hits, after.misses - before.misses) == (1, 1)
+    assert after.capacity == 1024
+    with pytest.raises(ValueError):  # memoized arrays are shared: read-only
+        served.encode_sql(sql)[1][0, 0] = 1.0
+
+
+def test_resnapshot_rebuilds_encoder_and_drops_memo(spark, sf_dir, tmp_path):
+    """A re-snapshot must featurize against the new stats, not serve the
+    encoder (or the memoized encodings) built from the old ones."""
+    import numpy as np
+
+    from deep_query_optimization_spark.catalog import Database
+
+    engine = _packaged_stats_engine(spark, sf_dir)
+    sql = "SELECT COUNT(*) AS c FROM orders"
+    _, before = engine.encode_sql(sql)
+
+    other = Database.load(str(SNAPSHOT))
+    other["orders"].stats.rows *= 1000
+    engine.snapshot_path = str(tmp_path / "b.json")
+    other.save(engine.snapshot_path)
+    engine.snapshot()
+
+    assert engine.encoder.db is engine.db
+    assert engine.encode_cache_info().size == 0
+    _, after = engine.encode_sql(sql)
+    assert not np.array_equal(before, after)

@@ -370,6 +370,12 @@ def test_hints_order_variants_and_choice(db):
 
     variants = order_variants(q, limit=6)
     assert variants[0] == q.to_sql()
+    # the engine's encoding memo serves the canonical candidate from the
+    # hint gate's estimate of q.to_sql(), so the identity must hold for
+    # every query shape
+    for seed in range(50):
+        rq = RandomQueryGen(db, seed=seed).randomize()
+        assert order_variants(rq, limit=6)[0] == rq.to_sql(), seed
     assert len(variants) == 6  # 3! orderings of the FROM clause
     assert len(set(variants)) == 6
     # join-order-only: same predicates in every variant, same SELECT list
@@ -384,6 +390,9 @@ def test_hints_order_variants_and_choice(db):
 
         def estimate(self, sql):
             return self.costs[sql]
+
+        def estimate_many(self, sqls):
+            return [self.estimate(sql) for sql in sqls]
 
     costs = {sql: float(i) for i, sql in enumerate(variants)}
     costs[variants[3]] = -1.0  # cheapest
@@ -424,6 +433,9 @@ def test_hints_margin_by_bucket_gates_override(db):
 
         def estimate(self, sql):
             return self.costs[sql]
+
+        def estimate_many(self, sqls):
+            return [self.estimate(sql) for sql in sqls]
 
     # default estimated 2.0s (bucket 1), candidate 1.5s: a 0.9 margin
     # takes the override, a strict 0.5 margin for bucket 1 rejects it
@@ -491,6 +503,9 @@ def test_hints_abstain_on_uncalibrated_bucket(db):
 
         def estimate(self, sql):
             return self.costs[sql]
+
+        def estimate_many(self, sqls):
+            return [self.estimate(sql) for sql in sqls]
 
     # default 32s (bucket 5), candidate 2s (bucket 1): a huge predicted
     # win, and the flat margin would take it — but bucket 5 has no
@@ -639,6 +654,9 @@ def test_hints_min_gain_floor_gates_cheap_overrides(db):
 
         def estimate(self, sql):
             return self.costs[sql]
+
+        def estimate_many(self, sqls):
+            return [self.estimate(sql) for sql in sqls]
 
     # 2x ratio win, but only 30 ms absolute: floor rejects, no floor takes
     cheap = FakeEngine({variants[0]: 0.06, variants[1]: 0.03})

@@ -143,3 +143,77 @@ def test_encode_plan_end_to_end(spark, tables, db):
     assert mat.shape[1] == enc.width
     assert np.isfinite(mat).all()
     assert mat.any(axis=1).sum() >= 3  # most nodes got non-zero features
+
+
+def test_column_name_index_matches_linear_scan(spark, tables, db):
+    """The encoder's name index resolves every token of a plan's JSON
+    exactly as the first-match scan over ``db.tables`` it replaced —
+    including the JSON key ``value`` of every Literal resolving to
+    ``events.value``, pinned here as it is: fixing it changes encodings."""
+    from deep_query_optimization_spark.plans.encoder import _COND_RE
+
+    def linear(name):
+        bare = name.split(".")[-1].strip("`")
+        for t in db.tables:
+            for c in t.columns:
+                if c.name == bare:
+                    return (t.name, c.name)
+        return None
+
+    enc = PlanEncoder(db)
+    df = (
+        tables["lineitem"]
+        .filter(F.col("l_quantity") > 30)
+        .join(tables["orders"], F.expr("l_orderkey = o_orderkey"))
+        .select("l_quantity", "o_totalprice")
+    )
+    plan_json = df._jdf.queryExecution().optimizedPlan().toJSON()
+    names = [c.name for t in db.tables for c in t.columns]
+    tokens = _COND_RE.findall(plan_json) + names
+    tokens += [f"{t.name}.{c.name}" for t in db.tables for c in t.columns]
+    tokens += ["`orders`.`o_custkey`", "value", "nope", "a.b.nope", ""]
+    assert "value" in _COND_RE.findall(plan_json)
+    for tok in tokens:
+        assert enc.find_column(tok) == linear(tok), tok
+    assert enc.find_column("value") == ("events", "value")
+
+
+def test_cached_vectors_are_read_only(db):
+    enc = PlanEncoder(db)
+    for v in (
+        enc.column_vector("lineitem", "l_quantity"),
+        enc.column_vector("lineitem", "nope"),
+        enc.relation_vector("lineitem"),
+        enc.relation_vector("nope"),
+    ):
+        with pytest.raises(ValueError):
+            v[0] = 1.0
+    assert enc.column_vector("lineitem", "l_quantity") is enc.column_vector("lineitem", "l_quantity")
+
+
+def test_shared_encoder_concurrent_encodes_match_serial(spark, tables, db):
+    """The engine's encode pool shares one encoder, and with it the
+    vector caches, across threads: many more threads than cores, with a
+    tiny switch interval, must produce exactly the serial encodings."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    dfs = [
+        tables["lineitem"].filter(F.col("l_quantity") > 30).select("l_orderkey"),
+        tables["lineitem"].join(tables["orders"], F.expr("l_orderkey = o_orderkey")).select("o_totalprice"),
+        tables["orders"].join(tables["customer"], F.expr("o_custkey = c_custkey")).groupBy("c_mktsegment").count(),
+    ]
+    roots = [parse_optimized_plan(df) for df in dfs]
+    serial = [PlanEncoder(db).encode_plan(root) for root in roots]
+    shared = PlanEncoder(db)
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(16) as ex:
+            futures = [ex.submit(shared.encode_plan, roots[i % len(roots)]) for i in range(96)]
+            results = [f.result(timeout=60) for f in futures]
+    finally:
+        sys.setswitchinterval(old)
+    for i, (ids, mat) in enumerate(results):
+        want_ids, want_mat = serial[i % len(roots)]
+        assert np.array_equal(ids, want_ids) and np.array_equal(mat, want_mat)
