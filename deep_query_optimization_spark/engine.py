@@ -30,8 +30,9 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 
 from deep_query_optimization_spark.catalog import TPCH_TABLES, Database, load_tables
-from deep_query_optimization_spark.estimator import MLPCostModel, QueriesDataset
+from deep_query_optimization_spark.estimator import QueriesDataset
 from deep_query_optimization_spark.estimator.metrics import bucketize, mae, mcc_metrics
+from deep_query_optimization_spark.estimator.model import FAMILIES
 from deep_query_optimization_spark.generator.guided import BalancedQueryGen
 from deep_query_optimization_spark.generator.partitioner import Log2Partitioner
 from deep_query_optimization_spark.lab.executor import QueryLog, SparkQueryRunner
@@ -43,6 +44,8 @@ from deep_query_optimization_spark.stats import collect_stats
 # Memoized plan encodings per engine, LRU. Corpus encodings are 4.8 KB
 # at the median and 15 KB at most, so a full memo holds about 16 MB.
 ENCODE_MEMO_SIZE = 1024
+
+_log = logging.getLogger(__name__)
 
 
 class EncodeCacheInfo(NamedTuple):
@@ -78,7 +81,7 @@ class DQOEngine:
         self._memo_hits = 0
         self._memo_misses = 0
         self._pool: ThreadPoolExecutor | None = None
-        self.model: MLPCostModel | None = None
+        self.model = None  # a FAMILIES model, once trained or loaded
         # latched True after a failed checkpoint probe: default-on
         # hints degrade to pass-through without re-hitting the fs
         self._hints_unavailable = False
@@ -210,7 +213,7 @@ class DQOEngine:
                 # per-engine — after a persist_artifacts restore, build a
                 # fresh Engine (or call load_best explicitly) to re-probe.
                 self._hints_unavailable = True
-                logging.getLogger(__name__).warning(
+                _log.warning(
                     "hints: disabled for this engine — load_best() failed: "
                     "%s: %s",
                     type(exc).__name__,
@@ -220,6 +223,7 @@ class DQOEngine:
         try:
             q = self.parse(sql)
         except Exception:
+            _log.debug("hints: cannot lift the query into the IR; running it as given", exc_info=True)
             return sql  # not liftable into the IR: hints are advisory
         if len(q.relations) < 2 or not q.joins:
             return sql
@@ -247,6 +251,7 @@ class DQOEngine:
                 min_gain_s=min_gain_s,
             )
         except Exception:
+            _log.debug("hints: estimating the join orders failed; running the query as given", exc_info=True)
             return sql
         if chosen_sql == scored[0][1]:
             # no override chosen: run the CALLER's text, not the
@@ -340,25 +345,14 @@ class DQOEngine:
         seed: int = 0,
         family: str = "mlp",
     ) -> dict:
-        """Train one cost-model family ("mlp" | "gru" | "cnn" |
-        "treelstm") — the facade twin of tools/train_estimator.py's
-        side-by-side comparison."""
-        from deep_query_optimization_spark.estimator.model import (
-            CNNCostModel,
-            GRUCostModel,
-            TreeLSTMCostModel,
-        )
-
+        """Train one cost-model family (a ``FAMILIES`` name) — the
+        facade twin of tools/train_estimator.py's side-by-side
+        comparison."""
+        cls = FAMILIES[family]
         train, test = ds.stratified_split(0.2, seed=seed)
-        encode = self.encode_sql_tree if family == "treelstm" else self.encode_sql
+        encode = self.encode_sql_tree if cls.ENCODING == "tree" else self.encode_sql
         enc_train = [encode(sql) for sql, _, _ in train.rows]
         enc_test = [encode(sql) for sql, _, _ in test.rows]
-        cls = {
-            "mlp": MLPCostModel,
-            "gru": GRUCostModel,
-            "cnn": CNNCostModel,
-            "treelstm": TreeLSTMCostModel,
-        }[family]
         self.model = cls(in_dim=self.encoder.width, seed=seed)
         self._model_family = family
         self.model.fit(enc_train, [r for _, r, _ in train.rows], epochs=epochs, lr=lr)
@@ -388,20 +382,6 @@ class DQOEngine:
         set-based encoders the facade does not wire; load those via
         their own modules.
         """
-        from deep_query_optimization_spark.estimator.model import (
-            CNNCostModel,
-            Gerelt4CostModel,
-            GRUCostModel,
-            TreeLSTMCostModel,
-        )
-
-        loaders = {
-            "mlp": MLPCostModel,
-            "gru": GRUCostModel,
-            "cnn": CNNCostModel,
-            "treelstm": TreeLSTMCostModel,
-            "gerelt4": Gerelt4CostModel,
-        }
         if family is None:
             stem = os.path.basename(model_json)
             if not (stem.startswith("model_") and stem.endswith(".json")):
@@ -409,9 +389,9 @@ class DQOEngine:
                     f"cannot infer family from {stem!r}; pass family= explicitly"
                 )
             family = stem[len("model_") : -len(".json")].removesuffix("_finetuned")
-        if family not in loaders:
-            raise ValueError(f"unsupported family {family!r} (have {sorted(loaders)})")
-        self.model = loaders[family].load(model_json)
+        if family not in FAMILIES:
+            raise ValueError(f"unsupported family {family!r} (have {sorted(FAMILIES)})")
+        self.model = FAMILIES[family].load(model_json)
         self._model_family = family
         # remember the staging dir so optimize_sql can pick the
         # calibration report fitted to THIS checkpoint's distribution
@@ -440,9 +420,9 @@ class DQOEngine:
 
     def estimate(self, sql: str) -> float:
         """Predicted runtime (seconds) for a query — the reference's
-        whole reason to exist, served from the live engine. Structural
-        models (TreeLSTM, Gerelt4) are detected by their ``children``
-        forward argument and fed the tree encoding."""
+        whole reason to exist, served from the live engine. Models
+        whose ``ENCODING`` is "tree" (TreeLSTM, Gerelt4) are fed the
+        tree encoding."""
         encode = self.encode_sql_tree if self._encoding_kind() == "tree" else self.encode_sql
         return self._predict_s(encode(sql))
 
@@ -458,9 +438,7 @@ class DQOEngine:
     def _encoding_kind(self) -> str:
         if self.model is None:
             raise RuntimeError("train_estimator or load_estimator first")
-        import inspect
-
-        return "tree" if "children" in inspect.signature(self.model.forward).parameters else "plan"
+        return self.model.ENCODING
 
     def _predict_s(self, enc) -> float:
         pred_log2 = self.model.predict([enc])[0]

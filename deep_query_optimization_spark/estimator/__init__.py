@@ -3,10 +3,10 @@
 Reference ``dqo/estimator`` (§2.8): labeled query datasets with
 log2-bucketed runtimes, bucket-balanced splits, metrics
 (accuracy/MAE/macro-F1), several neural architectures, and an
-evaluation harness. PyTorch is not available in this container, so the
-trainable model is a from-scratch numpy MLP over pooled plan-node
-vectors (the reference's MLP baseline family); the GRU/TreeLSTM
-variants are architecture drop-ins once torch exists (import-gated).
+evaluation harness. All seven model families (MLP, GRU, Gerelt4,
+TreeLSTM, CNN, MSCN, Neo) train in numpy on one shared core
+(``model._CostModel``); ``model.FAMILIES`` names the ones the engine
+serves from plan encodings.
 """
 
 from deep_query_optimization_spark.estimator.dataset import QueriesDataset  # noqa: F401

@@ -92,7 +92,7 @@ def fit_with_checkpoints(
     lr: float = 2e-3,
 ) -> list[Path]:
     """Train saving periodic checkpoints — works for any model exposing
-    ``train_step``/``save`` (MLPCostModel, GRUCostModel)."""
+    ``train_step``/``save`` (every gradient-trained cost model)."""
     import math as _math
 
     targets = [_math.log2(max(t, 1e-3)) for t in runtimes]
@@ -109,35 +109,17 @@ def fit_with_checkpoints(
 
 
 def load_checkpoint(path: str):
-    """Sniff the blob format: TreeLSTM/CNN blobs are tagged ``kind``,
-    GRU checkpoints carry a ``params`` dict, MLP checkpoints carry
-    per-type embedding matrices."""
-    from deep_query_optimization_spark.estimator.model import (
-        CNNCostModel,
-        Gerelt4CostModel,
-        GRUCostModel,
-        MLPCostModel,
-        TreeLSTMCostModel,
-    )
+    """Load any saved cost model by the ``kind`` its blob is tagged
+    with. Untagged blobs predate the tag: GRU checkpoints carry a
+    ``params`` dict, MLP checkpoints per-type embedding matrices."""
+    from deep_query_optimization_spark.estimator.model import FAMILIES
+    from deep_query_optimization_spark.estimator.mscn import MSCNCostModel
+    from deep_query_optimization_spark.estimator.neo import NeoCostModel
 
     with open(path) as f:
         blob = json.load(f)
-    kind = blob.get("kind")
-    if kind == "treelstm":
-        return TreeLSTMCostModel.load(path)
-    if kind == "cnn":
-        return CNNCostModel.load(path)
-    if kind == "gerelt4":
-        return Gerelt4CostModel.load(path)
-    if kind == "mscn":
-        from deep_query_optimization_spark.estimator.mscn import MSCNCostModel
-
-        return MSCNCostModel.load(path)
-    if kind == "neo":
-        from deep_query_optimization_spark.estimator.neo import NeoCostModel
-
-        return NeoCostModel.load(path)
-    return GRUCostModel.load(path) if "params" in blob else MLPCostModel.load(path)
+    kind = blob.get("kind") or ("gru" if "params" in blob else "mlp")
+    return {**FAMILIES, "mscn": MSCNCostModel, "neo": NeoCostModel}[kind].load(path)
 
 
 def compare_versions(checkpoint_paths, plans, rows) -> dict[str, dict]:

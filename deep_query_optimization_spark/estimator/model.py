@@ -4,16 +4,28 @@ Reference architectures (``dqo/estimator/*``): per-node-type MLP
 embeddings feeding GRUs over four tree traversals (gerelt), TreeLSTM,
 CNN, flat-GRU (greq), and MLP baselines — all predicting log2(runtime).
 
-Torch is not in this container, so the trained model here is the MLP
-baseline family implemented directly in numpy (manual backprop, Adam):
-per-node-type embedding matrices → mean-pool over plan nodes → 2-layer
-head → scalar log2 runtime, SmoothL1 loss (reference
-``v20/model.py:124-131``). The pooled-embedding inputs are exactly the
-``PlanEncoder`` outputs, so swapping in a torch GRU later changes only
-this file (import-gated hook at the bottom).
+Every family here trains in numpy, with hand-written backprop, Adam
+and the reference's SmoothL1 loss (``v20/model.py:124-131``):
 
-Inference is exposed as a pandas UDF (``predict_udf``) so the engine
-can score query cost in-session, vectorized over Arrow batches.
+- ``MLPCostModel``: per-node-type embeddings, mean-pooled over the
+  plan's nodes, into a 2-layer head;
+- ``GRUCostModel``: a bidirectional GRU over the preorder node sequence;
+- ``Gerelt4CostModel``: bidirectional GRUs over four tree traversals;
+- ``TreeLSTMCostModel``: a child-sum TreeLSTM over the plan tree;
+- ``CNNCostModel``: 1-D convolutions over the node sequence;
+- ``MSCNCostModel`` and ``NeoCostModel`` (``mscn.py``, ``neo.py``):
+  query-level set and vector encodings;
+- ``LinearCostModel``: the closed-form least-squares floor.
+
+``_CostModel`` is the shared training core: the parameter dict ``P``,
+Adam, the clipped SmoothL1 train step, ``fit``, ``predict`` and JSON
+``save``/``load``. A family adds only its layers, ``_forward`` and
+``_backward``. ``FAMILIES`` maps the names of the five families that
+read ``PlanEncoder`` output to their classes, and each class's
+``ENCODING`` names the encoding it reads.
+
+Inference is also exposed as a pandas UDF (``predict_udf``) so a Spark
+job can score pre-encoded plans vectorized over Arrow batches.
 """
 
 from __future__ import annotations
@@ -63,54 +75,176 @@ def smooth_l1(err: np.ndarray, beta: float = 1.0) -> tuple[np.ndarray, np.ndarra
     return loss, grad
 
 
-class MLPCostModel:
-    """mean-pooled node embeddings → hidden → log2 runtime."""
+def _sigmoid(x: np.ndarray) -> np.ndarray:
+    return 1.0 / (1.0 + np.exp(-np.clip(x, -30, 30)))
 
-    def __init__(self, in_dim: int, embed_dim: int = 48, hidden: int = 64, seed: int = 0) -> None:
-        rng = np.random.default_rng(seed)
-        self.in_dim = in_dim
-        # per-node-type embedding matrices (reference v20/model.py:17-60)
-        self.W_embed = {
-            t: rng.normal(0, math.sqrt(2.0 / in_dim), (in_dim, embed_dim)) for t in range(len(NODE_TYPES))
-        }
-        self.b_embed = {t: np.zeros(embed_dim) for t in range(len(NODE_TYPES))}
-        self.W1 = rng.normal(0, math.sqrt(2.0 / embed_dim), (embed_dim, hidden))
-        self.b1 = np.zeros(hidden)
-        self.W2 = rng.normal(0, math.sqrt(2.0 / hidden), (hidden, 1))
-        self.b2 = np.zeros(1)
+
+def _roots(n: int, children: list[list[int]]) -> list[int]:
+    """Nodes no other node lists as a child: spliced non-vocabulary
+    nodes (union/limit/sort) can leave a forest."""
+    is_child = [False] * n
+    for kids in children:
+        for k in kids:
+            is_child[k] = True
+    return [j for j in range(n) if not is_child[j]]
+
+
+class _CostModel:
+    """The shared numpy training core. A subclass fills ``P`` in its
+    ``__init__`` and defines ``_forward(*enc) -> (pred, cache)`` and
+    ``_backward(*enc, cache, dpred, grads)``, which adds one sample's
+    gradients into ``grads``."""
+
+    # the encoding the model reads: "plan" is PlanEncoder.encode_plan's
+    # (ids, mat), "tree" is encode_tree's (ids, mat, children); MSCN and
+    # Neo read query-level encodings of their own ("mscn", "neo")
+    ENCODING = "plan"
+    KIND = ""  # the family name saved blobs are tagged with
+    HYPER: tuple[str, ...] = ("in_dim", "embed_dim", "hidden")  # __init__ arguments a blob keeps
+
+    def __init__(self) -> None:
+        self.P: dict[str, np.ndarray] = {}
         self._adam_state: dict[str, tuple[np.ndarray, np.ndarray]] = {}
         self._adam_t = 0
 
-    # -- forward -------------------------------------------------------
+    # -- layers of the node-sequence families --------------------------
 
-    def _pool(self, ids: np.ndarray, mat: np.ndarray) -> np.ndarray:
-        if len(ids) == 0:
-            return np.zeros(self.W1.shape[0])
-        embs = np.stack([mat[i] @ self.W_embed[int(t)] + self.b_embed[int(t)] for i, t in enumerate(ids)])
-        return np.maximum(embs, 0).mean(axis=0)
+    def _init_embed(self, rng, in_dim: int, embed_dim: int) -> None:
+        # per-node-type embedding matrices (reference v20/model.py:17-60)
+        for t in range(len(NODE_TYPES)):
+            self.P[f"We{t}"] = rng.normal(0, math.sqrt(2.0 / in_dim), (in_dim, embed_dim))
+            self.P[f"be{t}"] = np.zeros(embed_dim)
 
-    def forward(self, ids: np.ndarray, mat: np.ndarray) -> float:
-        pooled = self._pool(ids, mat)
-        h = np.maximum(pooled @ self.W1 + self.b1, 0)
-        return float((h @ self.W2 + self.b2)[0])
+    def _init_head(self, rng, n_in: int, hidden: int) -> None:
+        self.P["W1"] = rng.normal(0, math.sqrt(2.0 / n_in), (n_in, hidden))
+        self.P["b1"] = np.zeros(hidden)
+        self.P["W2"] = rng.normal(0, math.sqrt(2.0 / hidden), (hidden, 1))
+        self.P["b2"] = np.zeros(1)
 
-    def predict(self, plans: list[tuple[np.ndarray, np.ndarray]]) -> np.ndarray:
-        return np.array([self.forward(ids, mat) for ids, mat in plans])
+    def _embed(self, ids, mat):
+        pre = [mat[i] @ self.P[f"We{int(t)}"] + self.P[f"be{int(t)}"] for i, t in enumerate(ids)]
+        return pre, [np.maximum(e, 0) for e in pre]
+
+    def _embed_back(self, ids, mat, pre, dxs, grads) -> None:
+        for i, t in enumerate(ids):
+            de = dxs[i] * (pre[i] > 0)
+            grads[f"We{int(t)}"] += np.outer(mat[i], de)
+            grads[f"be{int(t)}"] += de
+
+    def _head(self, feat):
+        """ReLU layer then the scalar output: (pred, h1_pre, h1)."""
+        h1_pre = feat @ self.P["W1"] + self.P["b1"]
+        h1 = np.maximum(h1_pre, 0)
+        return float((h1 @ self.P["W2"] + self.P["b2"])[0]), h1_pre, h1
+
+    def _head_back(self, feat, h1_pre, h1, dpred, grads) -> np.ndarray:
+        """Adds the head's gradients; returns dloss/dfeat."""
+        grads["W2"] += np.outer(h1, dpred)
+        grads["b2"] += np.array([dpred])
+        dh1 = (self.P["W2"][:, 0] * dpred) * (h1_pre > 0)
+        grads["W1"] += np.outer(feat, dh1)
+        grads["b1"] += dh1
+        return self.P["W1"] @ dh1
+
+    # -- inference -----------------------------------------------------
+
+    @staticmethod
+    def _inputs(enc) -> tuple:
+        """One encoding as ``_forward``'s positional arguments."""
+        return enc
+
+    def forward(self, *enc) -> float:
+        return self._forward(*enc)[0]
+
+    def predict(self, plans) -> np.ndarray:
+        return np.array([self.forward(*self._inputs(p)) for p in plans])
 
     # -- training ------------------------------------------------------
 
-    def _adam(self, name: str, param: np.ndarray, grad: np.ndarray, lr: float) -> None:
+    def _adam(self, name: str, grad: np.ndarray, lr: float) -> None:
         beta1, beta2, eps = 0.9, 0.999, 1e-8
-        m, v = self._adam_state.get(name, (np.zeros_like(param), np.zeros_like(param)))
+        p = self.P[name]
+        m, v = self._adam_state.get(name, (np.zeros_like(p), np.zeros_like(p)))
         m = beta1 * m + (1 - beta1) * grad
         v = beta2 * v + (1 - beta2) * grad**2
         self._adam_state[name] = (m, v)
-        mhat = m / (1 - beta1**self._adam_t)
-        vhat = v / (1 - beta2**self._adam_t)
-        param -= lr * mhat / (np.sqrt(vhat) + eps)
+        p -= lr * (m / (1 - beta1**self._adam_t)) / (np.sqrt(v / (1 - beta2**self._adam_t)) + eps)
+
+    def train_step(self, plans, targets, lr: float = 1e-3, clip: float = 5.0) -> float:
+        """One Adam step on the mean SmoothL1 loss, the gradient's
+        global norm clipped to ``clip``; returns the mean loss."""
+        self._adam_t += 1
+        grads = {k: np.zeros_like(v) for k, v in self.P.items()}
+        total = 0.0
+        n_samples = max(len(plans), 1)
+        for enc, y in zip(plans, targets):
+            args = self._inputs(enc)
+            pred, fwd = self._forward(*args)
+            loss, dpred = smooth_l1(np.array([pred - y]))
+            total += float(loss[0])
+            self._backward(*args, fwd, float(dpred[0]) / n_samples, grads)
+        gnorm = math.sqrt(sum(float((g**2).sum()) for g in grads.values()))
+        scale = min(1.0, clip / max(gnorm, 1e-12))
+        for name, g in grads.items():
+            self._adam(name, g * scale, lr)
+        return total / n_samples
+
+    def fit(
+        self,
+        plans,
+        runtimes,
+        epochs: int = 300,
+        lr: float = 2e-3,
+        log_every: int = 0,
+        batch_size: int | None = None,
+        seed: int = 0,
+    ) -> list[float]:
+        return _fit_loop(self, plans, runtimes, epochs, lr, log_every, batch_size, seed)
+
+    # -- persistence ---------------------------------------------------
+
+    def save(self, path: str) -> None:
+        blob = {"kind": self.KIND, **{k: getattr(self, k) for k in self.HYPER}}
+        blob["params"] = {k: v.tolist() for k, v in self.P.items()}
+        with open(path, "w") as f:
+            json.dump(blob, f)
+
+    @classmethod
+    def load(cls, path: str):
+        with open(path) as f:
+            blob = json.load(f)
+        m = cls(**{k: blob[k] for k in cls.HYPER})
+        m.P = {k: np.array(v) for k, v in cls._params(blob).items()}
+        return m
+
+    @staticmethod
+    def _params(blob: dict) -> dict:
+        return blob["params"]
+
+
+class MLPCostModel(_CostModel):
+    """mean-pooled node embeddings → hidden → log2 runtime. Its Adam
+    step is sparse and unclipped: only the node types present in a
+    batch step their Adam state."""
+
+    KIND = "mlp"
+    HYPER = ("in_dim",)  # layer widths are read off the saved params
+
+    def __init__(self, in_dim: int, embed_dim: int = 48, hidden: int = 64, seed: int = 0) -> None:
+        super().__init__()
+        rng = np.random.default_rng(seed)
+        self.in_dim = in_dim
+        self._init_embed(rng, in_dim, embed_dim)
+        self._init_head(rng, embed_dim, hidden)
+
+    def _forward(self, ids, mat):
+        pre, embs = self._embed(ids, mat)
+        pooled = np.mean(embs, axis=0) if embs else np.zeros(self.P["W1"].shape[0])
+        pred, h_pre, h = self._head(pooled)
+        return pred, (pre, embs, pooled, h_pre, h)
 
     def train_step(self, plans, targets, lr: float = 1e-3) -> float:
-        """One full-batch gradient step; returns mean loss."""
+        """One gradient step over ``plans``; returns mean loss."""
         self._adam_t += 1
         grads: dict[str, np.ndarray] = {}
 
@@ -120,23 +254,16 @@ class MLPCostModel:
         total_loss = 0.0
         n = len(plans)
         for (ids, mat), y in zip(plans, targets):
-            # forward with caches
-            embs_pre = [mat[i] @ self.W_embed[int(t)] + self.b_embed[int(t)] for i, t in enumerate(ids)]
-            embs = [np.maximum(e, 0) for e in embs_pre]
-            pooled = np.mean(embs, axis=0) if embs else np.zeros(self.W1.shape[0])
-            h_pre = pooled @ self.W1 + self.b1
-            h = np.maximum(h_pre, 0)
-            pred = float((h @ self.W2 + self.b2)[0])
+            pred, (embs_pre, embs, pooled, h_pre, h) = self._forward(ids, mat)
             loss, dred = smooth_l1(np.array([pred - y]))
             total_loss += float(loss[0])
             d = float(dred[0]) / n
-            # backward
             acc("W2", np.outer(h, d))
             acc("b2", np.array([d]))
-            dh = (self.W2[:, 0] * d) * (h_pre > 0)
+            dh = (self.P["W2"][:, 0] * d) * (h_pre > 0)
             acc("W1", np.outer(pooled, dh))
             acc("b1", dh)
-            dpool = self.W1 @ dh
+            dpool = self.P["W1"] @ dh
             if embs:
                 dembs = dpool / len(embs)
                 for i, t in enumerate(ids):
@@ -144,12 +271,7 @@ class MLPCostModel:
                     acc(f"We{int(t)}", np.outer(mat[i], de))
                     acc(f"be{int(t)}", de)
         for name, g in grads.items():
-            if name.startswith("We"):
-                self._adam(name, self.W_embed[int(name[2:])], g, lr)
-            elif name.startswith("be"):
-                self._adam(name, self.b_embed[int(name[2:])], g, lr)
-            else:
-                self._adam(name, getattr(self, name), g, lr)
+            self._adam(name, g, lr)
         return total_loss / max(n, 1)
 
     def fit(
@@ -164,31 +286,15 @@ class MLPCostModel:
     ) -> list[float]:
         return _fit_loop(self, plans, runtimes, epochs, lr, log_every, batch_size, seed)
 
-    # -- persistence ---------------------------------------------------
-
-    def save(self, path: str) -> None:
-        blob = {
-            "in_dim": self.in_dim,
-            "W_embed": {str(k): v.tolist() for k, v in self.W_embed.items()},
-            "b_embed": {str(k): v.tolist() for k, v in self.b_embed.items()},
-            "W1": self.W1.tolist(),
-            "b1": self.b1.tolist(),
-            "W2": self.W2.tolist(),
-            "b2": self.b2.tolist(),
-        }
-        with open(path, "w") as f:
-            json.dump(blob, f)
-
-    @classmethod
-    def load(cls, path: str) -> "MLPCostModel":
-        with open(path) as f:
-            blob = json.load(f)
-        m = cls(in_dim=blob["in_dim"])
-        m.W_embed = {int(k): np.array(v) for k, v in blob["W_embed"].items()}
-        m.b_embed = {int(k): np.array(v) for k, v in blob["b_embed"].items()}
-        m.W1, m.b1 = np.array(blob["W1"]), np.array(blob["b1"])
-        m.W2, m.b2 = np.array(blob["W2"]), np.array(blob["b2"])
-        return m
+    @staticmethod
+    def _params(blob: dict) -> dict:
+        if "params" in blob:
+            return blob["params"]
+        # older blobs keep the embeddings in two per-type dicts
+        params = {f"We{t}": w for t, w in blob["W_embed"].items()}
+        params.update({f"be{t}": b for t, b in blob["b_embed"].items()})
+        params.update({k: blob[k] for k in ("W1", "b1", "W2", "b2")})
+        return params
 
 
 class LinearCostModel:
@@ -197,6 +303,8 @@ class LinearCostModel:
     the sanity baseline the learned models must beat (the reference
     benchmarked against MSCN/Neo reimplementations; this is the
     engine-agnostic floor)."""
+
+    ENCODING = "plan"
 
     def __init__(self) -> None:
         self.w: np.ndarray | None = None
@@ -217,16 +325,11 @@ class LinearCostModel:
         return X @ self.w
 
 
-def _sigmoid(x: np.ndarray) -> np.ndarray:
-    return 1.0 / (1.0 + np.exp(-np.clip(x, -30, 30)))
-
-
-class GRUCostModel:
+class GRUCostModel(_CostModel):
     """Sequence model over the plan's node-vector traversal — the
     reference's headline architecture family (gerelt: per-node-type
     embeddings feeding GRUs over tree traversals,
-    ``dqo/estimator/gerelt/v20/model.py:17-122``), built in numpy
-    (manual BPTT + Adam) because torch is absent from this container.
+    ``dqo/estimator/gerelt/v20/model.py:17-122``), with manual BPTT.
 
     Architecture: per-node-type embedding (ReLU) → two GRUs read the
     preorder sequence forward and reversed (the cheap stand-in for
@@ -235,32 +338,20 @@ class GRUCostModel:
     states → ReLU head → scalar log2(runtime). SmoothL1 loss, same as
     the reference (``v20/model.py:124-131``)."""
 
+    KIND = "gru"
     DIRS = ("f", "b")
 
     def __init__(self, in_dim: int, embed_dim: int = 32, hidden: int = 32, seed: int = 0) -> None:
+        super().__init__()
         rng = np.random.default_rng(seed)
         self.in_dim, self.embed_dim, self.hidden = in_dim, embed_dim, hidden
-        self.P: dict[str, np.ndarray] = {}
-        for t in range(len(NODE_TYPES)):
-            self.P[f"We{t}"] = rng.normal(0, math.sqrt(2.0 / in_dim), (in_dim, embed_dim))
-            self.P[f"be{t}"] = np.zeros(embed_dim)
+        self._init_embed(rng, in_dim, embed_dim)
         for d in self.DIRS:
             for g in ("z", "r", "n"):
                 self.P[f"W{g}{d}"] = rng.normal(0, math.sqrt(1.0 / embed_dim), (embed_dim, hidden))
                 self.P[f"U{g}{d}"] = rng.normal(0, math.sqrt(1.0 / hidden), (hidden, hidden))
                 self.P[f"b{g}{d}"] = np.zeros(hidden)
-        self.P["W1"] = rng.normal(0, math.sqrt(2.0 / (2 * hidden)), (2 * hidden, hidden))
-        self.P["b1"] = np.zeros(hidden)
-        self.P["W2"] = rng.normal(0, math.sqrt(2.0 / hidden), (hidden, 1))
-        self.P["b2"] = np.zeros(1)
-        self._adam_state: dict[str, tuple[np.ndarray, np.ndarray]] = {}
-        self._adam_t = 0
-
-    # -- forward -------------------------------------------------------
-
-    def _embed(self, ids, mat):
-        pre = [mat[i] @ self.P[f"We{int(t)}"] + self.P[f"be{int(t)}"] for i, t in enumerate(ids)]
-        return pre, [np.maximum(e, 0) for e in pre]
+        self._init_head(rng, len(self.DIRS) * hidden, hidden)
 
     def _gru_run(self, xs, d: str):
         """Forward one direction; returns per-step caches for BPTT."""
@@ -275,24 +366,6 @@ class GRUCostModel:
             caches.append((x, h, z, r, n))
             h = h_new
         return h, caches
-
-    def _forward(self, ids, mat):
-        pre, xs = self._embed(ids, mat)
-        hf, cf = self._gru_run(xs, "f")
-        hb, cb = self._gru_run(xs[::-1], "b")
-        hc = np.concatenate([hf, hb])
-        h1_pre = hc @ self.P["W1"] + self.P["b1"]
-        h1 = np.maximum(h1_pre, 0)
-        pred = float((h1 @ self.P["W2"] + self.P["b2"])[0])
-        return pred, (pre, xs, cf, cb, hc, h1_pre, h1)
-
-    def forward(self, ids, mat) -> float:
-        return self._forward(ids, mat)[0]
-
-    def predict(self, plans) -> np.ndarray:
-        return np.array([self.forward(ids, mat) for ids, mat in plans])
-
-    # -- backward ------------------------------------------------------
 
     def _gru_back(self, dh, caches, d: str, grads, dxs):
         P = self.P
@@ -324,74 +397,24 @@ class GRUCostModel:
             dxs[t] += dx
             dh = dh_prev
 
-    def _adam(self, name: str, grad: np.ndarray, lr: float) -> None:
-        beta1, beta2, eps = 0.9, 0.999, 1e-8
-        p = self.P[name]
-        m, v = self._adam_state.get(name, (np.zeros_like(p), np.zeros_like(p)))
-        m = beta1 * m + (1 - beta1) * grad
-        v = beta2 * v + (1 - beta2) * grad**2
-        self._adam_state[name] = (m, v)
-        p -= lr * (m / (1 - beta1**self._adam_t)) / (np.sqrt(v / (1 - beta2**self._adam_t)) + eps)
+    def _forward(self, ids, mat):
+        pre, xs = self._embed(ids, mat)
+        hf, cf = self._gru_run(xs, "f")
+        hb, cb = self._gru_run(xs[::-1], "b")
+        hc = np.concatenate([hf, hb])
+        pred, h1_pre, h1 = self._head(hc)
+        return pred, (pre, xs, cf, cb, hc, h1_pre, h1)
 
-    def train_step(self, plans, targets, lr: float = 1e-3, clip: float = 5.0) -> float:
-        self._adam_t += 1
-        grads = {k: np.zeros_like(v) for k, v in self.P.items()}
-        total = 0.0
-        n_samples = max(len(plans), 1)
-        for (ids, mat), y in zip(plans, targets):
-            pred, (pre, xs, cf, cb, hc, h1_pre, h1) = self._forward(ids, mat)
-            loss, dpred = smooth_l1(np.array([pred - y]))
-            total += float(loss[0])
-            d = float(dpred[0]) / n_samples
-            grads["W2"] += np.outer(h1, d)
-            grads["b2"] += np.array([d])
-            dh1 = (self.P["W2"][:, 0] * d) * (h1_pre > 0)
-            grads["W1"] += np.outer(hc, dh1)
-            grads["b1"] += dh1
-            dhc = self.P["W1"] @ dh1
-            dxs = [np.zeros(self.embed_dim) for _ in xs]
-            self._gru_back(dhc[: self.hidden], cf, "f", grads, dxs)
-            dxs_rev = [np.zeros(self.embed_dim) for _ in xs]
-            self._gru_back(dhc[self.hidden :], cb, "b", grads, dxs_rev)
-            for t_rev, dx in enumerate(dxs_rev):
-                dxs[len(xs) - 1 - t_rev] += dx
-            for i, t in enumerate(ids):
-                de = dxs[i] * (pre[i] > 0)
-                grads[f"We{int(t)}"] += np.outer(mat[i], de)
-                grads[f"be{int(t)}"] += de
-        gnorm = math.sqrt(sum(float((g**2).sum()) for g in grads.values()))
-        scale = min(1.0, clip / max(gnorm, 1e-12))
-        for name, g in grads.items():
-            self._adam(name, g * scale, lr)
-        return total / n_samples
-
-    def fit(
-        self,
-        plans,
-        runtimes,
-        epochs: int = 300,
-        lr: float = 2e-3,
-        log_every: int = 0,
-        batch_size: int | None = None,
-        seed: int = 0,
-    ) -> list[float]:
-        return _fit_loop(self, plans, runtimes, epochs, lr, log_every, batch_size, seed)
-
-    # -- persistence ---------------------------------------------------
-
-    def save(self, path: str) -> None:
-        blob = {"in_dim": self.in_dim, "embed_dim": self.embed_dim, "hidden": self.hidden}
-        blob["params"] = {k: v.tolist() for k, v in self.P.items()}
-        with open(path, "w") as f:
-            json.dump(blob, f)
-
-    @classmethod
-    def load(cls, path: str) -> "GRUCostModel":
-        with open(path) as f:
-            blob = json.load(f)
-        m = cls(in_dim=blob["in_dim"], embed_dim=blob["embed_dim"], hidden=blob["hidden"])
-        m.P = {k: np.array(v) for k, v in blob["params"].items()}
-        return m
+    def _backward(self, ids, mat, fwd, dpred, grads):
+        pre, xs, cf, cb, hc, h1_pre, h1 = fwd
+        dhc = self._head_back(hc, h1_pre, h1, dpred, grads)
+        dxs = [np.zeros(self.embed_dim) for _ in xs]
+        self._gru_back(dhc[: self.hidden], cf, "f", grads, dxs)
+        dxs_rev = [np.zeros(self.embed_dim) for _ in xs]
+        self._gru_back(dhc[self.hidden :], cb, "b", grads, dxs_rev)
+        for t_rev, dx in enumerate(dxs_rev):
+            dxs[len(xs) - 1 - t_rev] += dx
+        self._embed_back(ids, mat, pre, dxs, grads)
 
 
 class Gerelt4CostModel(GRUCostModel):
@@ -401,9 +424,9 @@ class Gerelt4CostModel(GRUCostModel):
     linearizations, each traversal's final hidden state is tanh'd, the
     eight stream states concatenate into the regression head. Where
     ``GRUCostModel`` is the bidirectional-preorder stand-in, this is
-    the faithful four-traversal rendition (numpy, manual BPTT, Adam —
-    torch is absent from this container; head sizes follow this repo's
-    32-unit convention rather than the reference's 125/128/48/16).
+    the faithful four-traversal rendition (manual BPTT; head sizes
+    follow this repo's 32-unit convention rather than the reference's
+    125/128/48/16).
 
     Consumes ``PlanEncoder.encode_tree`` output (ids, mat, children)
     with preorder indexing, same as ``TreeLSTMCostModel``. Inorder
@@ -421,38 +444,16 @@ class Gerelt4CostModel(GRUCostModel):
     sequence. Spliced plans can leave a forest; roots traverse in
     index order."""
 
+    ENCODING = "tree"
+    KIND = "gerelt4"
     STREAMS = ("pre", "ino", "post", "bfs")
     DIRS = tuple(f"{s}_{d}" for s in ("pre", "ino", "post", "bfs") for d in ("f", "b"))
-
-    def __init__(self, in_dim: int, embed_dim: int = 32, hidden: int = 32, seed: int = 0) -> None:
-        rng = np.random.default_rng(seed)
-        self.in_dim, self.embed_dim, self.hidden = in_dim, embed_dim, hidden
-        self.P: dict[str, np.ndarray] = {}
-        for t in range(len(NODE_TYPES)):
-            self.P[f"We{t}"] = rng.normal(0, math.sqrt(2.0 / in_dim), (in_dim, embed_dim))
-            self.P[f"be{t}"] = np.zeros(embed_dim)
-        for d in self.DIRS:
-            for g in ("z", "r", "n"):
-                self.P[f"W{g}{d}"] = rng.normal(0, math.sqrt(1.0 / embed_dim), (embed_dim, hidden))
-                self.P[f"U{g}{d}"] = rng.normal(0, math.sqrt(1.0 / hidden), (hidden, hidden))
-                self.P[f"b{g}{d}"] = np.zeros(hidden)
-        cat = len(self.DIRS) * hidden
-        self.P["W1"] = rng.normal(0, math.sqrt(2.0 / cat), (cat, hidden))
-        self.P["b1"] = np.zeros(hidden)
-        self.P["W2"] = rng.normal(0, math.sqrt(2.0 / hidden), (hidden, 1))
-        self.P["b2"] = np.zeros(1)
-        self._adam_state: dict[str, tuple[np.ndarray, np.ndarray]] = {}
-        self._adam_t = 0
 
     # -- traversals ----------------------------------------------------
 
     @staticmethod
     def _orders(n: int, children: list[list[int]]) -> dict[str, list[int]]:
-        is_child = [False] * n
-        for kids in children:
-            for k in kids:
-                is_child[k] = True
-        roots = [j for j in range(n) if not is_child[j]]
+        roots = _roots(n, children)
 
         post: list[int] = []
 
@@ -510,81 +511,33 @@ class Gerelt4CostModel(GRUCostModel):
             outs.append(np.tanh(hf))
             outs.append(np.tanh(hb))
         hc = np.concatenate(outs)
-        h1_pre = hc @ self.P["W1"] + self.P["b1"]
-        h1 = np.maximum(h1_pre, 0)
-        pred = float((h1 @ self.P["W2"] + self.P["b2"])[0])
+        pred, h1_pre, h1 = self._head(hc)
         return pred, (pre_act, xs, orders, caches, hc, h1_pre, h1)
 
-    def forward(self, ids, mat, children) -> float:
-        return self._forward(ids, mat, children)[0]
-
-    def predict(self, plans) -> np.ndarray:
-        return np.array([self.forward(ids, mat, ch) for ids, mat, ch in plans])
-
-    def train_step(self, plans, targets, lr: float = 1e-3, clip: float = 5.0) -> float:
-        self._adam_t += 1
-        grads = {k: np.zeros_like(v) for k, v in self.P.items()}
-        total = 0.0
-        n_samples = max(len(plans), 1)
-        for (ids, mat, children), y in zip(plans, targets):
-            pred, (pre_act, xs, orders, caches, hc, h1_pre, h1) = self._forward(ids, mat, children)
-            loss, dpred = smooth_l1(np.array([pred - y]))
-            total += float(loss[0])
-            d = float(dpred[0]) / n_samples
-            grads["W2"] += np.outer(h1, d)
-            grads["b2"] += np.array([d])
-            dh1 = (self.P["W2"][:, 0] * d) * (h1_pre > 0)
-            grads["W1"] += np.outer(hc, dh1)
-            grads["b1"] += dh1
-            dhc = self.P["W1"] @ dh1
-            dxs = [np.zeros(self.embed_dim) for _ in xs]
-            for si, s in enumerate(self.STREAMS):
-                cf, cb, hf, hb = caches[s]
-                order = orders[s]
-                df_ = dhc[(2 * si) * self.hidden : (2 * si + 1) * self.hidden] * (1 - np.tanh(hf) ** 2)
-                db_ = dhc[(2 * si + 1) * self.hidden : (2 * si + 2) * self.hidden] * (1 - np.tanh(hb) ** 2)
-                dxs_s = [np.zeros(self.embed_dim) for _ in order]
-                self._gru_back(df_, cf, f"{s}_f", grads, dxs_s)
-                dxs_s_rev = [np.zeros(self.embed_dim) for _ in order]
-                self._gru_back(db_, cb, f"{s}_b", grads, dxs_s_rev)
-                for t_rev, dx in enumerate(dxs_s_rev):
-                    dxs_s[len(order) - 1 - t_rev] += dx
-                for pos, node_i in enumerate(order):
-                    dxs[node_i] += dxs_s[pos]
-            for i, t in enumerate(ids):
-                de = dxs[i] * (pre_act[i] > 0)
-                grads[f"We{int(t)}"] += np.outer(mat[i], de)
-                grads[f"be{int(t)}"] += de
-        gnorm = math.sqrt(sum(float((g**2).sum()) for g in grads.values()))
-        scale = min(1.0, clip / max(gnorm, 1e-12))
-        for name, g in grads.items():
-            self._adam(name, g * scale, lr)
-        return total / n_samples
-
-    def save(self, path: str) -> None:
-        blob = {
-            "kind": "gerelt4",
-            "in_dim": self.in_dim,
-            "embed_dim": self.embed_dim,
-            "hidden": self.hidden,
-        }
-        blob["params"] = {k: v.tolist() for k, v in self.P.items()}
-        with open(path, "w") as f:
-            json.dump(blob, f)
-
-    @classmethod
-    def load(cls, path: str) -> "Gerelt4CostModel":
-        with open(path) as f:
-            blob = json.load(f)
-        m = cls(in_dim=blob["in_dim"], embed_dim=blob["embed_dim"], hidden=blob["hidden"])
-        m.P = {k: np.array(v) for k, v in blob["params"].items()}
-        return m
+    def _backward(self, ids, mat, children, fwd, dpred, grads):
+        pre_act, xs, orders, caches, hc, h1_pre, h1 = fwd
+        dhc = self._head_back(hc, h1_pre, h1, dpred, grads)
+        dxs = [np.zeros(self.embed_dim) for _ in xs]
+        for si, s in enumerate(self.STREAMS):
+            cf, cb, hf, hb = caches[s]
+            order = orders[s]
+            df_ = dhc[(2 * si) * self.hidden : (2 * si + 1) * self.hidden] * (1 - np.tanh(hf) ** 2)
+            db_ = dhc[(2 * si + 1) * self.hidden : (2 * si + 2) * self.hidden] * (1 - np.tanh(hb) ** 2)
+            dxs_s = [np.zeros(self.embed_dim) for _ in order]
+            self._gru_back(df_, cf, f"{s}_f", grads, dxs_s)
+            dxs_s_rev = [np.zeros(self.embed_dim) for _ in order]
+            self._gru_back(db_, cb, f"{s}_b", grads, dxs_s_rev)
+            for t_rev, dx in enumerate(dxs_s_rev):
+                dxs_s[len(order) - 1 - t_rev] += dx
+            for pos, node_i in enumerate(order):
+                dxs[node_i] += dxs_s[pos]
+        self._embed_back(ids, mat, pre_act, dxs, grads)
 
 
-class TreeLSTMCostModel:
+class TreeLSTMCostModel(_CostModel):
     """Child-sum TreeLSTM over the PLAN TREE (reference
     ``dqo/estimator/treelstm/v1/childsum.py:7`` — Tai et al. 2015),
-    numpy with manual structural backprop + Adam. Where the GRU reads a
+    with manual structural backprop. Where the GRU reads a
     linearized traversal, this recurses the actual operator tree:
     per-node-type embedded inputs, child-hidden sums for the i/o/u
     gates, one forget gate PER CHILD, root hidden state → ReLU head →
@@ -594,31 +547,22 @@ class TreeLSTMCostModel:
     with preorder indexing (child index > parent index, so iterating
     indices in reverse is bottom-up and forward order is top-down)."""
 
+    ENCODING = "tree"
+    KIND = "treelstm"
     GATES = ("i", "o", "u", "f")
 
     def __init__(self, in_dim: int, embed_dim: int = 32, hidden: int = 32, seed: int = 0) -> None:
+        super().__init__()
         rng = np.random.default_rng(seed)
         self.in_dim, self.embed_dim, self.hidden = in_dim, embed_dim, hidden
-        self.P: dict[str, np.ndarray] = {}
-        for t in range(len(NODE_TYPES)):
-            self.P[f"We{t}"] = rng.normal(0, math.sqrt(2.0 / in_dim), (in_dim, embed_dim))
-            self.P[f"be{t}"] = np.zeros(embed_dim)
+        self._init_embed(rng, in_dim, embed_dim)
         for g in self.GATES:
             self.P[f"W{g}"] = rng.normal(0, math.sqrt(1.0 / embed_dim), (embed_dim, hidden))
             self.P[f"U{g}"] = rng.normal(0, math.sqrt(1.0 / hidden), (hidden, hidden))
             self.P[f"b{g}"] = np.zeros(hidden)
         # forget bias 1.0: standard LSTM trick so child state flows early
         self.P["bf"] += 1.0
-        self.P["W1"] = rng.normal(0, math.sqrt(2.0 / hidden), (hidden, hidden))
-        self.P["b1"] = np.zeros(hidden)
-        self.P["W2"] = rng.normal(0, math.sqrt(2.0 / hidden), (hidden, 1))
-        self.P["b2"] = np.zeros(1)
-        self._adam_state: dict[str, tuple[np.ndarray, np.ndarray]] = {}
-        self._adam_t = 0
-
-    def _embed(self, ids, mat):
-        pre = [mat[i] @ self.P[f"We{int(t)}"] + self.P[f"be{int(t)}"] for i, t in enumerate(ids)]
-        return pre, [np.maximum(e, 0) for e in pre]
+        self._init_head(rng, hidden, hidden)
 
     def _forward(self, ids, mat, children):
         P = self.P
@@ -639,37 +583,19 @@ class TreeLSTMCostModel:
             hj = go * np.tanh(cj)
             h[j], c[j] = hj, cj
             cache[j] = (x, hsum, gi, go, gu, fks, cj)
-        # spliced non-vocabulary nodes (union/limit/sort) can leave a
-        # forest — pool the root hiddens
-        is_child = [False] * n
-        for kids in children:
-            for k in kids:
-                is_child[k] = True
-        roots = [j for j in range(n) if not is_child[j]]
+        # a forest pools its root hiddens
+        roots = _roots(n, children)
         h_root = np.mean([h[j] for j in roots], axis=0)
-        h1_pre = h_root @ P["W1"] + P["b1"]
-        h1 = np.maximum(h1_pre, 0)
-        predv = float((h1 @ P["W2"] + P["b2"])[0])
+        predv, h1_pre, h1 = self._head(h_root)
         return predv, (pre, xs, h, c, cache, h1_pre, h1, roots, h_root)
-
-    def forward(self, ids, mat, children) -> float:
-        return self._forward(ids, mat, children)[0]
-
-    def predict(self, plans) -> np.ndarray:
-        return np.array([self.forward(ids, mat, ch) for ids, mat, ch in plans])
 
     def _backward(self, ids, mat, children, fwd, dpred, grads):
         P = self.P
         pre, xs, h, c, cache, h1_pre, h1, roots, h_root = fwd
         n = len(xs)
-        grads["W2"] += np.outer(h1, dpred)
-        grads["b2"] += np.array([dpred])
-        dh1 = (P["W2"][:, 0] * dpred) * (h1_pre > 0)
-        grads["W1"] += np.outer(h_root, dh1)
-        grads["b1"] += dh1
         dh = [np.zeros(self.hidden) for _ in range(n)]
         dc = [np.zeros(self.hidden) for _ in range(n)]
-        dh_root = P["W1"] @ dh1 / len(roots)
+        dh_root = self._head_back(h_root, h1_pre, h1, dpred, grads) / len(roots)
         for j in roots:
             dh[j] = dh_root.copy()
         dxs = [np.zeros(self.embed_dim) for _ in range(n)]
@@ -705,76 +631,20 @@ class TreeLSTMCostModel:
                 dh[k] += dhsum + P["Uf"] @ df_pre
                 dc[k] += dcj * f
             dxs[j] += dx
-        for i, t in enumerate(ids):
-            de = dxs[i] * (pre[i] > 0)
-            grads[f"We{int(t)}"] += np.outer(mat[i], de)
-            grads[f"be{int(t)}"] += de
-
-    def _adam(self, name: str, grad: np.ndarray, lr: float) -> None:
-        beta1, beta2, eps = 0.9, 0.999, 1e-8
-        p = self.P[name]
-        m, v = self._adam_state.get(name, (np.zeros_like(p), np.zeros_like(p)))
-        m = beta1 * m + (1 - beta1) * grad
-        v = beta2 * v + (1 - beta2) * grad**2
-        self._adam_state[name] = (m, v)
-        p -= lr * (m / (1 - beta1**self._adam_t)) / (np.sqrt(v / (1 - beta2**self._adam_t)) + eps)
-
-    def train_step(self, plans, targets, lr: float = 1e-3, clip: float = 5.0) -> float:
-        self._adam_t += 1
-        grads = {k: np.zeros_like(v) for k, v in self.P.items()}
-        total = 0.0
-        n_samples = max(len(plans), 1)
-        for (ids, mat, ch), y in zip(plans, targets):
-            predv, fwd = self._forward(ids, mat, ch)
-            loss, dpred = smooth_l1(np.array([predv - y]))
-            total += float(loss[0])
-            self._backward(ids, mat, ch, fwd, float(dpred[0]) / n_samples, grads)
-        gnorm = math.sqrt(sum(float((g**2).sum()) for g in grads.values()))
-        scale = min(1.0, clip / max(gnorm, 1e-12))
-        for name, g in grads.items():
-            self._adam(name, g * scale, lr)
-        return total / n_samples
-
-    def fit(
-        self,
-        plans,
-        runtimes,
-        epochs: int = 300,
-        lr: float = 2e-3,
-        log_every: int = 0,
-        batch_size: int | None = None,
-        seed: int = 0,
-    ) -> list[float]:
-        return _fit_loop(self, plans, runtimes, epochs, lr, log_every, batch_size, seed)
-
-    def save(self, path: str) -> None:
-        blob = {
-            "kind": "treelstm",
-            "in_dim": self.in_dim,
-            "embed_dim": self.embed_dim,
-            "hidden": self.hidden,
-            "params": {k: v.tolist() for k, v in self.P.items()},
-        }
-        with open(path, "w") as f:
-            json.dump(blob, f)
-
-    @classmethod
-    def load(cls, path: str) -> "TreeLSTMCostModel":
-        with open(path) as f:
-            blob = json.load(f)
-        m = cls(in_dim=blob["in_dim"], embed_dim=blob["embed_dim"], hidden=blob["hidden"])
-        m.P = {k: np.array(v) for k, v in blob["params"].items()}
-        return m
+        self._embed_back(ids, mat, pre, dxs, grads)
 
 
-class CNNCostModel:
+class CNNCostModel(_CostModel):
     """1-D convolutional cost model over the plan's node-vector
     sequence (reference RelCNN, ``dqo/estimator/relcnn/v1/model.py:
-    51-76``) — numpy, manual backprop + Adam. Per-node-type embeddings
+    51-76``), with manual backprop. Per-node-type embeddings
     → parallel conv banks of widths ``widths`` (ReLU) → max-pool over
     time → ReLU head → log2(runtime). The convolutional view captures
     local operator motifs (scan→filter→join windows) that pooled MLPs
     lose; sequences shorter than a filter width are zero-padded."""
+
+    KIND = "cnn"
+    HYPER = ("in_dim", "embed_dim", "n_filters", "widths", "hidden")
 
     def __init__(
         self,
@@ -785,27 +655,15 @@ class CNNCostModel:
         hidden: int = 32,
         seed: int = 0,
     ) -> None:
+        super().__init__()
         rng = np.random.default_rng(seed)
         self.in_dim, self.embed_dim = in_dim, embed_dim
-        self.n_filters, self.widths, self.hidden = n_filters, widths, hidden
-        self.P: dict[str, np.ndarray] = {}
-        for t in range(len(NODE_TYPES)):
-            self.P[f"We{t}"] = rng.normal(0, math.sqrt(2.0 / in_dim), (in_dim, embed_dim))
-            self.P[f"be{t}"] = np.zeros(embed_dim)
-        for w in widths:
+        self.n_filters, self.widths, self.hidden = n_filters, tuple(widths), hidden
+        self._init_embed(rng, in_dim, embed_dim)
+        for w in self.widths:
             self.P[f"K{w}"] = rng.normal(0, math.sqrt(2.0 / (w * embed_dim)), (w * embed_dim, n_filters))
             self.P[f"kb{w}"] = np.zeros(n_filters)
-        feat = n_filters * len(widths)
-        self.P["W1"] = rng.normal(0, math.sqrt(2.0 / feat), (feat, hidden))
-        self.P["b1"] = np.zeros(hidden)
-        self.P["W2"] = rng.normal(0, math.sqrt(2.0 / hidden), (hidden, 1))
-        self.P["b2"] = np.zeros(1)
-        self._adam_state: dict[str, tuple[np.ndarray, np.ndarray]] = {}
-        self._adam_t = 0
-
-    def _embed(self, ids, mat):
-        pre = [mat[i] @ self.P[f"We{int(t)}"] + self.P[f"be{int(t)}"] for i, t in enumerate(ids)]
-        return pre, [np.maximum(e, 0) for e in pre]
+        self._init_head(rng, n_filters * len(self.widths), hidden)
 
     def _forward(self, ids, mat):
         pre, xs = self._embed(ids, mat)
@@ -825,26 +683,13 @@ class CNNCostModel:
             pooled_parts.append(pooled)
             conv_caches[w] = (win, z_pre, arg)
         feat = np.concatenate(pooled_parts)
-        h1_pre = feat @ self.P["W1"] + self.P["b1"]
-        h1 = np.maximum(h1_pre, 0)
-        predv = float((h1 @ self.P["W2"] + self.P["b2"])[0])
+        predv, h1_pre, h1 = self._head(feat)
         return predv, (pre, xs, X, conv_caches, feat, h1_pre, h1)
-
-    def forward(self, ids, mat) -> float:
-        return self._forward(ids, mat)[0]
-
-    def predict(self, plans) -> np.ndarray:
-        return np.array([self.forward(ids, mat) for ids, mat in plans])
 
     def _backward(self, ids, mat, fwd, dpred, grads):
         P = self.P
         pre, xs, X, conv_caches, feat, h1_pre, h1 = fwd
-        grads["W2"] += np.outer(h1, dpred)
-        grads["b2"] += np.array([dpred])
-        dh1 = (P["W2"][:, 0] * dpred) * (h1_pre > 0)
-        grads["W1"] += np.outer(feat, dh1)
-        grads["b1"] += dh1
-        dfeat = P["W1"] @ dh1
+        dfeat = self._head_back(feat, h1_pre, h1, dpred, grads)
         dX = np.zeros_like(X)
         for wi, w in enumerate(self.widths):
             win, z_pre, arg = conv_caches[w]
@@ -858,74 +703,18 @@ class CNNCostModel:
                 grads[f"K{w}"][:, f] += win[t] * g
                 grads[f"kb{w}"][f] += g
                 dX[t : t + w] += (P[f"K{w}"][:, f] * g).reshape(w, self.embed_dim)
-        for i, t in enumerate(ids):
-            de = dX[i] * (pre[i] > 0)
-            grads[f"We{int(t)}"] += np.outer(mat[i], de)
-            grads[f"be{int(t)}"] += de
+        self._embed_back(ids, mat, pre, dX, grads)
 
-    def _adam(self, name: str, grad: np.ndarray, lr: float) -> None:
-        beta1, beta2, eps = 0.9, 0.999, 1e-8
-        p = self.P[name]
-        m, v = self._adam_state.get(name, (np.zeros_like(p), np.zeros_like(p)))
-        m = beta1 * m + (1 - beta1) * grad
-        v = beta2 * v + (1 - beta2) * grad**2
-        self._adam_state[name] = (m, v)
-        p -= lr * (m / (1 - beta1**self._adam_t)) / (np.sqrt(v / (1 - beta2**self._adam_t)) + eps)
 
-    def train_step(self, plans, targets, lr: float = 1e-3, clip: float = 5.0) -> float:
-        self._adam_t += 1
-        grads = {k: np.zeros_like(v) for k, v in self.P.items()}
-        total = 0.0
-        n_samples = max(len(plans), 1)
-        for (ids, mat), y in zip(plans, targets):
-            predv, fwd = self._forward(ids, mat)
-            loss, dpred = smooth_l1(np.array([predv - y]))
-            total += float(loss[0])
-            self._backward(ids, mat, fwd, float(dpred[0]) / n_samples, grads)
-        gnorm = math.sqrt(sum(float((g**2).sum()) for g in grads.values()))
-        scale = min(1.0, clip / max(gnorm, 1e-12))
-        for name, g in grads.items():
-            self._adam(name, g * scale, lr)
-        return total / n_samples
-
-    def fit(
-        self,
-        plans,
-        runtimes,
-        epochs: int = 300,
-        lr: float = 2e-3,
-        log_every: int = 0,
-        batch_size: int | None = None,
-        seed: int = 0,
-    ) -> list[float]:
-        return _fit_loop(self, plans, runtimes, epochs, lr, log_every, batch_size, seed)
-
-    def save(self, path: str) -> None:
-        blob = {
-            "kind": "cnn",
-            "in_dim": self.in_dim,
-            "embed_dim": self.embed_dim,
-            "n_filters": self.n_filters,
-            "widths": list(self.widths),
-            "hidden": self.hidden,
-            "params": {k: v.tolist() for k, v in self.P.items()},
-        }
-        with open(path, "w") as f:
-            json.dump(blob, f)
-
-    @classmethod
-    def load(cls, path: str) -> "CNNCostModel":
-        with open(path) as f:
-            blob = json.load(f)
-        m = cls(
-            in_dim=blob["in_dim"],
-            embed_dim=blob["embed_dim"],
-            n_filters=blob["n_filters"],
-            widths=tuple(blob["widths"]),
-            hidden=blob["hidden"],
-        )
-        m.P = {k: np.array(v) for k, v in blob["params"].items()}
-        return m
+# the families served from PlanEncoder output, by the name their
+# checkpoints are saved under (``model_<family>.json``)
+FAMILIES: dict[str, type[_CostModel]] = {
+    "mlp": MLPCostModel,
+    "gru": GRUCostModel,
+    "cnn": CNNCostModel,
+    "treelstm": TreeLSTMCostModel,
+    "gerelt4": Gerelt4CostModel,
+}
 
 
 def predict_udf(model):
@@ -937,17 +726,11 @@ def predict_udf(model):
     one scan with no driver involvement.
 
         df.withColumn("pred_log2", predict_udf(model)("ids", "mat"))
-    """
+
+    Tree models (``ENCODING == "tree"``) take a third ``children``
+    column (array<array<long>> adjacency in preorder)."""
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
-
-    import inspect
-
-    # structural models (TreeLSTM) take a third `children` argument
-    # (array<array<long>> adjacency in preorder); dispatch on the
-    # model's forward signature instead of TypeError-ing at executor
-    # time
-    needs_children = "children" in inspect.signature(model.forward).parameters
 
     def _decode(ids, mat):
         ids_arr = np.asarray(ids, dtype=np.int64)
@@ -956,7 +739,7 @@ def predict_udf(model):
             mat_arr = mat_arr.reshape(len(ids_arr), -1)
         return ids_arr, mat_arr
 
-    if needs_children:
+    if model.ENCODING == "tree":
 
         def score(ids_s, mat_s, children_s):
             out = []
@@ -985,12 +768,3 @@ def predict_udf(model):
     # annotation objects so it infers the scalar eval type
     score.__annotations__ = {"ids_s": pd.Series, "mat_s": pd.Series, "return": pd.Series}
     return pandas_udf(score, "double")
-
-
-def torch_available() -> bool:
-    try:
-        import torch  # noqa: F401
-
-        return True
-    except ImportError:
-        return False

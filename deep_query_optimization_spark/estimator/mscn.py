@@ -11,7 +11,7 @@ binary-encoded index of the unordered table pair for joins, and
 (binary column index, binary operator index) for predicates — the
 reference's documented simplification of the paper's
 (col, op, normalized value) triple. Deviations from the torch
-original: numpy + manual backprop (torch absent here), and a LINEAR
+original: numpy + manual backprop, and a LINEAR
 output head trained on log2(runtime) with SmoothL1 — this repo
 estimates runtime, not normalized cardinality, so the original's
 sigmoid output is dropped.
@@ -23,12 +23,11 @@ Consumes the same Query IR the workload generator emits
 
 from __future__ import annotations
 
-import json
 import math
 
 import numpy as np
 
-from deep_query_optimization_spark.estimator.model import _fit_loop, smooth_l1
+from deep_query_optimization_spark.estimator.model import _CostModel
 
 OPS = ("<", "<=", ">", ">=", "!=", "=", "NOT LIKE", "BETWEEN", "LIKE", "IN", "IS NULL", "IS NOT NULL")
 
@@ -92,17 +91,20 @@ def _relu(x: np.ndarray) -> np.ndarray:
     return np.maximum(x, 0)
 
 
-class MSCNCostModel:
+class MSCNCostModel(_CostModel):
     """SetConv in numpy: per-set 2-layer MLP → average pool → concat →
     2-layer head → log2(runtime). Adam + SmoothL1, grad-checked in
     tests/test_estimator.py."""
 
+    ENCODING = "mscn"
+    KIND = "mscn"
+    HYPER = ("widths", "hidden")
     SETS = ("t", "j", "p")
 
     def __init__(self, widths: tuple[int, int, int], hidden: int = 32, seed: int = 0) -> None:
+        super().__init__()
         rng = np.random.default_rng(seed)
         self.widths, self.hidden = tuple(widths), hidden
-        self.P: dict[str, np.ndarray] = {}
         for s, w in zip(self.SETS, widths):
             self.P[f"W1{s}"] = rng.normal(0, math.sqrt(2.0 / max(w, 1)), (w, hidden))
             self.P[f"b1{s}"] = np.zeros(hidden)
@@ -112,8 +114,6 @@ class MSCNCostModel:
         self.P["bo1"] = np.zeros(hidden)
         self.P["Wo2"] = rng.normal(0, math.sqrt(2.0 / hidden), (hidden, 1))
         self.P["bo2"] = np.zeros(1)
-        self._adam_state: dict[str, tuple[np.ndarray, np.ndarray]] = {}
-        self._adam_t = 0
 
     def _set_forward(self, X: np.ndarray, s: str):
         if len(X) == 0:
@@ -136,78 +136,24 @@ class MSCNCostModel:
         pred = float((ho @ self.P["Wo2"] + self.P["bo2"])[0])
         return pred, (caches, hc, ho_pre, ho)
 
-    def forward(self, T, J, P_) -> float:
-        return self._forward(T, J, P_)[0]
-
-    def predict(self, plans) -> np.ndarray:
-        return np.array([self.forward(*p) for p in plans])
-
-    def _adam(self, name: str, grad: np.ndarray, lr: float) -> None:
-        beta1, beta2, eps = 0.9, 0.999, 1e-8
-        p = self.P[name]
-        m, v = self._adam_state.get(name, (np.zeros_like(p), np.zeros_like(p)))
-        m = beta1 * m + (1 - beta1) * grad
-        v = beta2 * v + (1 - beta2) * grad**2
-        self._adam_state[name] = (m, v)
-        p -= lr * (m / (1 - beta1**self._adam_t)) / (np.sqrt(v / (1 - beta2**self._adam_t)) + eps)
-
-    def train_step(self, plans, targets, lr: float = 1e-3, clip: float = 5.0) -> float:
-        self._adam_t += 1
-        grads = {k: np.zeros_like(v) for k, v in self.P.items()}
-        total = 0.0
-        n_samples = max(len(plans), 1)
-        for (T, J, P_), y in zip(plans, targets):
-            pred, (caches, hc, ho_pre, ho) = self._forward(T, J, P_)
-            loss, dpred = smooth_l1(np.array([pred - y]))
-            total += float(loss[0])
-            d = float(dpred[0]) / n_samples
-            grads["Wo2"] += np.outer(ho, d)
-            grads["bo2"] += np.array([d])
-            dho = (self.P["Wo2"][:, 0] * d) * (ho_pre > 0)
-            grads["Wo1"] += np.outer(hc, dho)
-            grads["bo1"] += dho
-            dhc = self.P["Wo1"] @ dho
-            for si, s in enumerate(self.SETS):
-                dpool = dhc[si * self.hidden : (si + 1) * self.hidden]
-                X, cache = caches[s]
-                if cache is None:
-                    continue
-                _, h1_pre, h1, h2_pre = cache
-                n = len(X)
-                dh2 = (np.tile(dpool, (n, 1)) / n) * (h2_pre > 0)
-                grads[f"W2{s}"] += h1.T @ dh2
-                grads[f"b2{s}"] += dh2.sum(axis=0)
-                dh1 = (dh2 @ self.P[f"W2{s}"].T) * (h1_pre > 0)
-                grads[f"W1{s}"] += X.T @ dh1
-                grads[f"b1{s}"] += dh1.sum(axis=0)
-        gnorm = math.sqrt(sum(float((g**2).sum()) for g in grads.values()))
-        scale = min(1.0, clip / max(gnorm, 1e-12))
-        for name, g in grads.items():
-            self._adam(name, g * scale, lr)
-        return total / n_samples
-
-    def fit(
-        self,
-        plans,
-        runtimes,
-        epochs: int = 300,
-        lr: float = 2e-3,
-        log_every: int = 0,
-        batch_size: int | None = None,
-        seed: int = 0,
-    ) -> list[float]:
-        return _fit_loop(self, plans, runtimes, epochs, lr, log_every, batch_size, seed)
-
-    def save(self, path: str) -> None:
-        blob = {"kind": "mscn", "widths": list(self.widths), "hidden": self.hidden}
-        blob["params"] = {k: v.tolist() for k, v in self.P.items()}
-        with open(path, "w") as f:
-            json.dump(blob, f)
-
-    @classmethod
-    def load(cls, path: str) -> "MSCNCostModel":
-        with open(path) as f:
-            blob = json.load(f)
-        m = cls(widths=tuple(blob["widths"]), hidden=blob["hidden"])
-        m.P = {k: np.array(v) for k, v in blob["params"].items()}
-        return m
+    def _backward(self, T, J, P_, fwd, d, grads):
+        caches, hc, ho_pre, ho = fwd
+        grads["Wo2"] += np.outer(ho, d)
+        grads["bo2"] += np.array([d])
+        dho = (self.P["Wo2"][:, 0] * d) * (ho_pre > 0)
+        grads["Wo1"] += np.outer(hc, dho)
+        grads["bo1"] += dho
+        dhc = self.P["Wo1"] @ dho
+        for si, s in enumerate(self.SETS):
+            dpool = dhc[si * self.hidden : (si + 1) * self.hidden]
+            X, cache = caches[s]
+            if cache is None:
+                continue
+            _, h1_pre, h1, h2_pre = cache
+            n = len(X)
+            dh2 = (np.tile(dpool, (n, 1)) / n) * (h2_pre > 0)
+            grads[f"W2{s}"] += h1.T @ dh2
+            grads[f"b2{s}"] += dh2.sum(axis=0)
+            dh1 = (dh2 @ self.P[f"W2{s}"].T) * (h1_pre > 0)
+            grads[f"W1{s}"] += X.T @ dh1
+            grads[f"b1{s}"] += dh1.sum(axis=0)

@@ -13,12 +13,11 @@ consistent with every other family in ``estimator/model.py``.
 
 from __future__ import annotations
 
-import json
 import math
 
 import numpy as np
 
-from deep_query_optimization_spark.estimator.model import _fit_loop, smooth_l1
+from deep_query_optimization_spark.estimator.model import _CostModel
 
 
 class NeoEncoder:
@@ -54,22 +53,27 @@ class NeoEncoder:
         return x
 
 
-class NeoCostModel:
+class NeoCostModel(_CostModel):
     """4-layer MLP regressor (reference ``neo/v1/model.py:22-35``)."""
 
+    ENCODING = "neo"
+    KIND = "neo"
+    HYPER = ("in_dim",)
     LAYERS = (64, 32, 16)
 
     def __init__(self, in_dim: int, seed: int = 0) -> None:
+        super().__init__()
         rng = np.random.default_rng(seed)
         self.in_dim = in_dim
         dims = (in_dim, *self.LAYERS, 1)
-        self.P: dict[str, np.ndarray] = {}
         for li in range(len(dims) - 1):
             self.P[f"W{li}"] = rng.normal(0, math.sqrt(2.0 / dims[li]), (dims[li], dims[li + 1]))
             self.P[f"b{li}"] = np.zeros(dims[li + 1])
         self.n_layers = len(dims) - 1
-        self._adam_state: dict[str, tuple[np.ndarray, np.ndarray]] = {}
-        self._adam_t = 0
+
+    @staticmethod
+    def _inputs(x) -> tuple:
+        return (x,)  # a Neo encoding is one flat vector
 
     def _forward(self, x: np.ndarray):
         acts = [x]
@@ -82,65 +86,12 @@ class NeoCostModel:
             acts.append(h)
         return float(h[0]), (acts, pres)
 
-    def forward(self, x: np.ndarray) -> float:
-        return self._forward(x)[0]
-
-    def predict(self, plans) -> np.ndarray:
-        return np.array([self.forward(x) for x in plans])
-
-    def _adam(self, name: str, grad: np.ndarray, lr: float) -> None:
-        beta1, beta2, eps = 0.9, 0.999, 1e-8
-        p = self.P[name]
-        m, v = self._adam_state.get(name, (np.zeros_like(p), np.zeros_like(p)))
-        m = beta1 * m + (1 - beta1) * grad
-        v = beta2 * v + (1 - beta2) * grad**2
-        self._adam_state[name] = (m, v)
-        p -= lr * (m / (1 - beta1**self._adam_t)) / (np.sqrt(v / (1 - beta2**self._adam_t)) + eps)
-
-    def train_step(self, plans, targets, lr: float = 1e-3, clip: float = 5.0) -> float:
-        self._adam_t += 1
-        grads = {k: np.zeros_like(v) for k, v in self.P.items()}
-        total = 0.0
-        n_samples = max(len(plans), 1)
-        for x, y in zip(plans, targets):
-            pred, (acts, pres) = self._forward(x)
-            loss, dpred = smooth_l1(np.array([pred - y]))
-            total += float(loss[0])
-            d = np.array([float(dpred[0]) / n_samples])
-            for li in range(self.n_layers - 1, -1, -1):
-                if li < self.n_layers - 1:
-                    d = d * (pres[li] > 0)
-                grads[f"W{li}"] += np.outer(acts[li], d)
-                grads[f"b{li}"] += d
-                d = self.P[f"W{li}"] @ d
-        gnorm = math.sqrt(sum(float((g**2).sum()) for g in grads.values()))
-        scale = min(1.0, clip / max(gnorm, 1e-12))
-        for name, g in grads.items():
-            self._adam(name, g * scale, lr)
-        return total / n_samples
-
-    def fit(
-        self,
-        plans,
-        runtimes,
-        epochs: int = 300,
-        lr: float = 2e-3,
-        log_every: int = 0,
-        batch_size: int | None = None,
-        seed: int = 0,
-    ) -> list[float]:
-        return _fit_loop(self, plans, runtimes, epochs, lr, log_every, batch_size, seed)
-
-    def save(self, path: str) -> None:
-        blob = {"kind": "neo", "in_dim": self.in_dim}
-        blob["params"] = {k: v.tolist() for k, v in self.P.items()}
-        with open(path, "w") as f:
-            json.dump(blob, f)
-
-    @classmethod
-    def load(cls, path: str) -> "NeoCostModel":
-        with open(path) as f:
-            blob = json.load(f)
-        m = cls(in_dim=blob["in_dim"])
-        m.P = {k: np.array(v) for k, v in blob["params"].items()}
-        return m
+    def _backward(self, x, fwd, dpred, grads):
+        acts, pres = fwd
+        d = np.array([dpred])
+        for li in range(self.n_layers - 1, -1, -1):
+            if li < self.n_layers - 1:
+                d = d * (pres[li] > 0)
+            grads[f"W{li}"] += np.outer(acts[li], d)
+            grads[f"b{li}"] += d
+            d = self.P[f"W{li}"] @ d

@@ -421,3 +421,55 @@ def test_resnapshot_rebuilds_encoder_and_drops_memo(spark, sf_dir, tmp_path):
     assert engine.encode_cache_info().size == 0
     _, after = engine.encode_sql(sql)
     assert not np.array_equal(before, after)
+
+
+@pytest.mark.parametrize("family", ["gerelt4", "treelstm"])
+def test_train_estimator_tree_families_serve_estimates(spark, sf_dir, family):
+    """Every FAMILIES name trains through the facade, and the tree
+    families are trained and served on the tree encoding."""
+    import math
+
+    from deep_query_optimization_spark.estimator import QueriesDataset
+
+    engine = _packaged_stats_engine(spark, sf_dir)
+    ds = QueriesDataset()
+    for sql, runtime in [
+        ("SELECT COUNT(*) AS c FROM orders", 0.2),
+        ("SELECT COUNT(*) AS c FROM lineitem", 0.5),
+        ("SELECT MIN(l_quantity) AS m FROM lineitem WHERE l_quantity > 30", 0.4),
+        ("SELECT MAX(c_acctbal) AS m FROM customer WHERE c_nationkey = 3", 0.3),
+        (JOIN3, 4.0),
+        ("SELECT MIN(o_totalprice) AS m FROM orders WHERE o_totalprice > 1000", 0.25),
+    ]:
+        ds.add(sql, runtime)
+    engine.train_estimator(ds, epochs=2, family=family)
+    assert engine.model.ENCODING == "tree"
+    assert engine.encode_cache_info().size == len(ds.rows)
+    assert math.isfinite(engine.estimate(JOIN3))
+    assert engine.encode_cache_info().hits >= 1  # served from the tree memo
+
+
+def test_optimize_sql_logs_swallowed_errors_at_debug(spark, sf_dir, caplog):
+    """The hint path's two pass-through fallbacks say why at DEBUG, with
+    the traceback, and stay silent at the default level."""
+    import logging
+
+    engine = _packaged_stats_engine(spark, sf_dir)
+    engine.model = object()
+
+    def exploding(sqls):
+        raise RuntimeError("estimator down")
+
+    engine.estimate = lambda s: 32.0
+    engine.estimate_many = exploding
+    bad = "SELECT no_such_column FROM orders"
+    with caplog.at_level(logging.WARNING, logger="deep_query_optimization_spark.engine"):
+        assert engine.optimize_sql(bad, calibration="") == bad
+        assert engine.optimize_sql(JOIN3, calibration="") == JOIN3
+    assert caplog.records == []
+    with caplog.at_level(logging.DEBUG, logger="deep_query_optimization_spark.engine"):
+        assert engine.optimize_sql(bad, calibration="") == bad
+        assert engine.optimize_sql(JOIN3, calibration="") == JOIN3
+    errors = [r.exc_info[0] for r in caplog.records if r.levelno == logging.DEBUG]
+    assert len(errors) == 2
+    assert errors[1] is RuntimeError

@@ -851,3 +851,140 @@ def test_stratified_split_min_floors_scarce_buckets():
     assert len(train.rows) + len(test.rows) == 240
     # no overlap
     assert not ({s for s, _, _ in train.rows} & {s for s, _, _ in test.rows})
+
+
+# -- pinned numerics of every family ------------------------------------
+#
+# sha1 digests of (init parameters, losses of a 3-epoch fit(batch_size=4),
+# predictions, predictions after save + load) on a seeded synthetic set.
+# Any change to an init's RNG draw order, the order gradients accumulate
+# in, Adam, clipping, the fit loop or the blob round-trip moves a digest.
+PINNED = {
+    "mlp": (
+        "e6565034bd86c65c4f27c034fa16a5815534efdc",
+        "440c3bf7da9c7a291d9e236246c938d58d93ade4",
+        "3f82d5bfee769616938237e1338abc66329db877",
+        "3f82d5bfee769616938237e1338abc66329db877",
+    ),
+    "gru": (
+        "7be39de98bbaf090a20f9cb020f45e664f1b483d",
+        "6b1849c9e594962c68691dbbeb129849e103ab95",
+        "1e473e70c65231d02d1b4fbdb27926a2eb33d0fe",
+        "1e473e70c65231d02d1b4fbdb27926a2eb33d0fe",
+    ),
+    "gerelt4": (
+        "c363510324df4c31f38d0ae9883eb78a38b6b278",
+        "382007b3852877417a8d7d4cf6f914e09fad2c95",
+        "9020b72a8c8a8395a464c5e4a15d37ca2387ed32",
+        "9020b72a8c8a8395a464c5e4a15d37ca2387ed32",
+    ),
+    "treelstm": (
+        "c0dd2aeb05ba5d1d57dc47ea9b47f693dde4faad",
+        "c72c2f9bfea5b9b527adbd46a95270fde3276cc4",
+        "12fd5d2812fc62c05868f544e40ab083df59ecfc",
+        "12fd5d2812fc62c05868f544e40ab083df59ecfc",
+    ),
+    "cnn": (
+        "ff2e5d16bd898cf6b8dd16f5099c23096ec1e372",
+        "130498c367c93e78d2ab9e4550e3c2b4c4f6fab4",
+        "c770eff2b2d466da54811efbfccf5b40942c84e6",
+        "c770eff2b2d466da54811efbfccf5b40942c84e6",
+    ),
+    "mscn": (
+        "ca6dd5ed59879465eb80c2eac24cc278a0635a69",
+        "0324971ed308a11f58c8cee2a06cb2c33262c738",
+        "ac6886d335205ac3c87c7ea6456a02807a70dd60",
+        "ac6886d335205ac3c87c7ea6456a02807a70dd60",
+    ),
+    "neo": (
+        "c884b38535fd7e81d8b4404b03bf0e12972f5991",
+        "88207ed227911996ccec249c434111e8a617c0b7",
+        "473ccdf7ceccd4aab9e311e856d81c47a564831b",
+        "473ccdf7ceccd4aab9e311e856d81c47a564831b",
+    ),
+}
+
+
+def _sha1(*arrays) -> str:
+    import hashlib
+
+    h = hashlib.sha1()
+    for a in arrays:
+        h.update(np.ascontiguousarray(a, dtype=np.float64).tobytes())
+    return h.hexdigest()
+
+
+def _preorder_tree(rng, n):
+    """A random tree on n nodes: (preorder permutation, children in
+    preorder indexing)."""
+    parent = [-1] + [int(rng.integers(0, j)) for j in range(1, n)]
+    kids = [[] for _ in range(n)]
+    for j in range(1, n):
+        kids[parent[j]].append(j)
+    order, stack = [], [0]
+    while stack:
+        j = stack.pop()
+        order.append(j)
+        stack.extend(reversed(kids[j]))
+    pos = {j: i for i, j in enumerate(order)}
+    return order, [sorted(pos[k] for k in kids[j]) for j in order]
+
+
+def _pinned_models():
+    from deep_query_optimization_spark.estimator.model import FAMILIES
+    from deep_query_optimization_spark.estimator.mscn import MSCNCostModel
+    from deep_query_optimization_spark.estimator.neo import NeoCostModel
+    from deep_query_optimization_spark.plans.encoder import NODE_TYPES
+
+    in_dim = 6
+    rng = np.random.default_rng(1234)
+    plan, tree, sets, vecs, runtimes = [], [], [], [], []
+    for i in range(12):
+        n = 1 + i % 6
+        ids = rng.integers(0, len(NODE_TYPES), n)
+        mat = rng.normal(size=(n, in_dim))
+        order, children = _preorder_tree(rng, n)
+        plan.append((ids, mat))
+        tree.append((ids[order], mat[order], children))
+        sets.append(tuple(rng.integers(0, 2, (int(rng.integers(0, 4)), w)).astype(float) for w in (3, 4, 5)))
+        vecs.append(rng.integers(0, 2, 10).astype(float))
+        runtimes.append(float(2.0 ** rng.uniform(-3, 6)))
+    models = {fam: (cls(in_dim=in_dim), tree if cls.ENCODING == "tree" else plan) for fam, cls in FAMILIES.items()}
+    models["mscn"] = (MSCNCostModel(widths=(3, 4, 5)), sets)
+    models["neo"] = (NeoCostModel(in_dim=10), vecs)
+    return models, runtimes
+
+
+@pytest.mark.parametrize("family", sorted(PINNED))
+def test_model_numerics_pinned(family, tmp_path):
+    """Init, training, inference and persistence of each family are
+    bit-identical to the pinned digests."""
+    models, runtimes = _pinned_models()
+    m, plans = models[family]
+    init = _sha1(*[m.P[k] for k in sorted(m.P)])
+    losses = _sha1(m.fit(plans, runtimes, epochs=3, batch_size=4))
+    preds = _sha1(m.predict(plans))
+    path = str(tmp_path / f"{family}.json")
+    m.save(path)
+    loaded = _sha1(type(m).load(path).predict(plans))
+    assert (init, losses, preds, loaded) == PINNED[family]
+
+
+def test_untagged_gru_blob_loads_through_families(tmp_path):
+    """GRU checkpoints written before blobs carried a ``kind`` still
+    load, both by family name and through ``load_checkpoint``."""
+    import json
+
+    from deep_query_optimization_spark.estimator.evaluate import load_checkpoint
+    from deep_query_optimization_spark.estimator.model import FAMILIES, GRUCostModel
+
+    m = GRUCostModel(in_dim=5, embed_dim=3, hidden=2, seed=4)
+    path = tmp_path / "model_gru.json"
+    blob = {"in_dim": 5, "embed_dim": 3, "hidden": 2, "params": {k: v.tolist() for k, v in m.P.items()}}
+    path.write_text(json.dumps(blob))
+    ids, mat = np.array([0, 2, 1]), np.random.default_rng(0).normal(size=(3, 5))
+    for loaded in (FAMILIES["gru"].load(str(path)), load_checkpoint(str(path))):
+        assert isinstance(loaded, GRUCostModel)
+        assert (loaded.in_dim, loaded.embed_dim, loaded.hidden) == (5, 3, 2)
+        assert loaded.P.keys() == m.P.keys()
+        assert loaded.forward(ids, mat) == m.forward(ids, mat)

@@ -1,8 +1,9 @@
-"""Pure helpers of the corpus tools: the graceful best-model pick
+"""The corpus and training tools: every tool that loads a model family
+imports cleanly, and the pure helpers of the graceful best-model pick
 (``tools/pick_best_model.py``) and the held-out scrub
-(``tools/filter_workload.py``). The module keeps its historical name so
-the test ids stay stable."""
+(``tools/filter_workload.py``)."""
 
+import importlib
 import json
 
 import pytest
@@ -10,6 +11,13 @@ import pytest
 from deep_query_optimization_spark.estimator import QueriesDataset
 from tools.filter_workload import filter_dir
 from tools.pick_best_model import collect_candidates, collect_sweep_candidates, pick
+
+
+def test_model_tools_import():
+    """The tools that train or serve a model family import cleanly, so a
+    broken import fails here rather than in the next training run."""
+    for tool in ("hint_report", "finetune_estimator", "calibration_report", "train_estimator", "train_joint"):
+        importlib.import_module(f"tools.{tool}")
 
 
 def _mk_train_root(tmp_path, accs):

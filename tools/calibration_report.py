@@ -31,23 +31,8 @@ from pyspark.sql import functions as F  # noqa: E402
 from deep_query_optimization_spark.engine import DQOEngine  # noqa: E402
 from deep_query_optimization_spark.estimator import QueriesDataset  # noqa: E402
 from deep_query_optimization_spark.estimator.metrics import bucketize, mae, mcc_metrics  # noqa: E402
-from deep_query_optimization_spark.estimator.model import (  # noqa: E402
-    CNNCostModel,
-    Gerelt4CostModel,
-    GRUCostModel,
-    MLPCostModel,
-    TreeLSTMCostModel,
-    predict_udf,
-)
+from deep_query_optimization_spark.estimator.model import FAMILIES, predict_udf  # noqa: E402
 from deep_query_optimization_spark.session import get_spark  # noqa: E402
-
-LOADERS = {
-    "mlp": MLPCostModel,
-    "cnn": CNNCostModel,
-    "gru": GRUCostModel,
-    "gerelt4": Gerelt4CostModel,
-    "treelstm": TreeLSTMCostModel,
-}
 
 
 def main() -> None:
@@ -56,7 +41,7 @@ def main() -> None:
     out_json = sys.argv[3] if len(sys.argv) > 3 else "reports/estimator_calibration_sf1.json"
     sf_dir = sys.argv[4] if len(sys.argv) > 4 else "/root/repo/.data/sf1"
 
-    model = LOADERS[family].load(str(est_dir / f"model_{family}.json"))
+    model = FAMILIES[family].load(str(est_dir / f"model_{family}.json"))
     ds = QueriesDataset.load(str(est_dir / "workload.csv"))
 
     spark = get_spark("dqo-calibration")
@@ -64,7 +49,7 @@ def main() -> None:
     engine = DQOEngine(spark, sf_dir, snapshot_path=str(est_dir / "schema.json"))
     engine.snapshot()
 
-    needs_children = family in ("gerelt4", "treelstm")
+    needs_children = model.ENCODING == "tree"
     encode = engine.encode_sql_tree if needs_children else engine.encode_sql
     from deep_query_optimization_spark.estimator.enc_cache import from_env as _cache_from_env
 

@@ -30,24 +30,9 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from deep_query_optimization_spark.engine import DQOEngine  # noqa: E402
 from deep_query_optimization_spark.estimator import QueriesDataset  # noqa: E402
-from deep_query_optimization_spark.estimator.model import (  # noqa: E402
-    CNNCostModel,
-    Gerelt4CostModel,
-    GRUCostModel,
-    MLPCostModel,
-    TreeLSTMCostModel,
-)
+from deep_query_optimization_spark.estimator.model import FAMILIES  # noqa: E402
 from deep_query_optimization_spark.session import get_spark  # noqa: E402
 from tools.train_estimator import evaluate, fit_affine  # noqa: E402
-
-LOADERS = {
-    "mlp": MLPCostModel,
-    "cnn": CNNCostModel,
-    "gru": GRUCostModel,
-    "treelstm": TreeLSTMCostModel,
-    "gerelt4": Gerelt4CostModel,
-}
-TREE_FAMILIES = {"treelstm", "gerelt4"}
 
 
 def main() -> None:
@@ -71,14 +56,14 @@ def main() -> None:
     )
     engine.snapshot()
 
-    model = LOADERS[family].load(model_json)
-    kind = "tree" if family in TREE_FAMILIES else "vec"
-    encode = engine.encode_sql_tree if kind == "tree" else engine.encode_sql
+    model = FAMILIES[family].load(model_json)
+    tree = model.ENCODING == "tree"
+    encode = engine.encode_sql_tree if tree else engine.encode_sql
     from deep_query_optimization_spark.estimator.enc_cache import from_env as _cache_from_env
 
     cache = _cache_from_env(engine.snapshot_path or "", engine.encoder.width)
     if cache:
-        encode = cache.wrap(kind, encode)
+        encode = cache.wrap("tree" if tree else "vec", encode)
 
     train = QueriesDataset.load(clean_csv)
     test = QueriesDataset.load(test_csv)

@@ -24,24 +24,10 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from deep_query_optimization_spark.engine import DQOEngine  # noqa: E402
-from deep_query_optimization_spark.estimator.model import (  # noqa: E402
-    CNNCostModel,
-    Gerelt4CostModel,
-    GRUCostModel,
-    MLPCostModel,
-    TreeLSTMCostModel,
-)
+from deep_query_optimization_spark.estimator.model import FAMILIES  # noqa: E402
 from deep_query_optimization_spark.generator import RandomQueryGen  # noqa: E402
 from deep_query_optimization_spark.plans.hints import reorder_by_estimate  # noqa: E402
 from deep_query_optimization_spark.session import get_spark  # noqa: E402
-
-LOADERS = {
-    "mlp": MLPCostModel,
-    "cnn": CNNCostModel,
-    "gru": GRUCostModel,
-    "gerelt4": Gerelt4CostModel,
-    "treelstm": TreeLSTMCostModel,
-}
 
 
 def pick_family(est_dir: Path) -> str:
@@ -51,7 +37,7 @@ def pick_family(est_dir: Path) -> str:
         scored = {
             fam: m["test"].get("accuracy", 0.0)
             for fam, m in report["models"].items()
-            if fam in LOADERS and (est_dir / f"model_{fam}.json").exists()
+            if fam in FAMILIES and (est_dir / f"model_{fam}.json").exists()
         }
         return max(scored, key=scored.get)
     except (OSError, KeyError, ValueError):
@@ -67,7 +53,7 @@ def main() -> None:
 
     if family == "auto":
         family = pick_family(est_dir)
-    model = LOADERS[family].load(str(est_dir / f"model_{family}.json"))
+    model = FAMILIES[family].load(str(est_dir / f"model_{family}.json"))
 
     spark = get_spark("dqo-hints")
     spark.sparkContext.setLogLevel("ERROR")

@@ -5,8 +5,9 @@ plus the model-family comparison (``estimator/evaluate.py:354``).
 Generates a balanced labeled workload (BalancedQueryGen against live
 Spark — the histogram-filling loop is what widens the runtime-bucket
 spread beyond what uniform random generation reaches), encodes the
-optimized plans, trains the three model families (linear baseline,
-pooled MLP, sequence GRU) on one stratified split, and writes:
+optimized plans, trains the eight model families (the linear
+baseline, the five ``FAMILIES`` models, MSCN and Neo) on one
+stratified split, and writes:
 
 - ``<out>/workload.csv``          labeled (sql, runtime) rows
 - ``<out>/model_<fam>.json``      trained weights per family
@@ -71,6 +72,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 from deep_query_optimization_spark.engine import DQOEngine  # noqa: E402
 from deep_query_optimization_spark.estimator.metrics import bucketize, mae, mcc_metrics  # noqa: E402
 from deep_query_optimization_spark.estimator.model import (  # noqa: E402
+    FAMILIES,
     CNNCostModel,
     Gerelt4CostModel,
     GRUCostModel,
@@ -78,6 +80,8 @@ from deep_query_optimization_spark.estimator.model import (  # noqa: E402
     MLPCostModel,
     TreeLSTMCostModel,
 )
+from deep_query_optimization_spark.estimator.mscn import MSCNCostModel, MSCNEncoder  # noqa: E402
+from deep_query_optimization_spark.estimator.neo import NeoCostModel, NeoEncoder  # noqa: E402
 from deep_query_optimization_spark.generator.partitioner import Log2Partitioner  # noqa: E402
 from deep_query_optimization_spark.session import get_spark  # noqa: E402
 
@@ -219,17 +223,15 @@ def main() -> None:
     # which families run decides which encodings are worth computing —
     # a single-family run (tools/train_parallel.py fans one process out
     # per family) must not pay for the other encoders' Spark round-trips
-    all_fams = ("linear", "mlp", "gru", "cnn", "treelstm", "gerelt4", "mscn", "neo")
+    classes = {"linear": LinearCostModel, **FAMILIES, "mscn": MSCNCostModel, "neo": NeoCostModel}
     only = os.environ.get("DQO_FAMILIES")
-    selected = {f.strip() for f in only.split(",")} & set(all_fams) if only else set(all_fams)
-    need_vec = bool(selected & {"linear", "mlp", "gru", "cnn"})
-    need_tree = bool(selected & {"treelstm", "gerelt4"})
-    need_set = bool(selected & {"mscn", "neo"})
+    selected = {f.strip() for f in only.split(",")} & set(classes) if only else set(classes)
+    encodings = {classes[f].ENCODING for f in selected}
 
     # -- augmentation (train split only) -------------------------------
     aug_n = int(os.environ.get("DQO_AUG", "0"))
     aug_rows: list[tuple[str, float]] = []
-    if aug_n > 1 and (need_vec or need_tree):
+    if aug_n > 1 and encodings & {"plan", "tree"}:
         from deep_query_optimization_spark.generator.augment import permutations
 
         t0 = time.time()
@@ -248,12 +250,6 @@ def main() -> None:
 
     t0 = time.time()
     train_sqls = [(sql, rt) for sql, rt, _ in train.rows] + aug_rows
-    enc_train = enc_test = tree_train = tree_test = None
-    mscn_train = mscn_test = neo_train = neo_test = None
-    enc_calib = tree_calib = mscn_calib = neo_calib = None
-    from deep_query_optimization_spark.estimator.mscn import MSCNCostModel, MSCNEncoder
-    from deep_query_optimization_spark.estimator.neo import NeoCostModel, NeoEncoder
-
     menc = MSCNEncoder(engine.db)
     nenc = NeoEncoder(engine.db)
     # optional on-disk encoding cache (DQO_ENC_CACHE=<path>): the Spark
@@ -263,35 +259,28 @@ def main() -> None:
     from deep_query_optimization_spark.estimator.enc_cache import from_env as _cache_from_env
 
     cache = _cache_from_env(engine.snapshot_path or "", engine.encoder.width)
-    enc_vec = cache.wrap("vec", engine.encode_sql) if cache else engine.encode_sql
-    enc_tree = cache.wrap("tree", engine.encode_sql_tree) if cache else engine.encode_sql_tree
-    _mscn_fn = lambda sql: menc.encode(engine.parse(sql))  # noqa: E731
-    _neo_fn = lambda sql: nenc.encode(engine.parse(sql))  # noqa: E731
-    enc_mscn = cache.wrap("mscn", _mscn_fn) if cache else _mscn_fn
-    enc_neo = cache.wrap("neo", _neo_fn) if cache else _neo_fn
-
-    if need_vec:
-        enc_train = [enc_vec(sql) for sql, _ in train_sqls]
-        enc_test = [enc_vec(sql) for sql, _, _ in test.rows]
-        if calib:
-            enc_calib = [enc_vec(sql) for sql, _, _ in calib.rows]
-    if need_tree:
-        tree_train = [enc_tree(sql) for sql, _ in train_sqls]
-        tree_test = [enc_tree(sql) for sql, _, _ in test.rows]
-        if calib:
-            tree_calib = [enc_tree(sql) for sql, _, _ in calib.rows]
-    if need_set:
+    # ENCODING -> (disk-cache kind, sql -> encoding)
+    encoders = {
+        "plan": ("vec", engine.encode_sql),
+        "tree": ("tree", engine.encode_sql_tree),
+        "mscn": ("mscn", lambda sql: menc.encode(engine.parse(sql))),
+        "neo": ("neo", lambda sql: nenc.encode(engine.parse(sql))),
+    }
+    # ENCODING -> (train, test, calib) encodings
+    encoded: dict[str, tuple] = {}
+    for kind, (cache_kind, fn) in encoders.items():
+        if kind not in encodings:
+            continue
+        enc = cache.wrap(cache_kind, fn) if cache else fn
         # set-based encoders are emission-order invariant — augmented
         # variants encode identically, so mscn/neo train on originals only
-        mscn_train = [enc_mscn(sql) for sql, _, _ in train.rows]
-        mscn_test = [enc_mscn(sql) for sql, _, _ in test.rows]
-        neo_train = [enc_neo(sql) for sql, _, _ in train.rows]
-        neo_test = [enc_neo(sql) for sql, _, _ in test.rows]
-        if calib:
-            mscn_calib = [enc_mscn(sql) for sql, _, _ in calib.rows]
-            neo_calib = [enc_neo(sql) for sql, _, _ in calib.rows]
-    rt_train = [rt for _, rt in train_sqls]
-    rt_train_orig = [r for _, r, _ in train.rows]
+        sqls = train.rows if kind in ("mscn", "neo") else train_sqls
+        encoded[kind] = (
+            [enc(row[0]) for row in sqls],
+            [enc(sql) for sql, _, _ in test.rows],
+            [enc(sql) for sql, _, _ in calib.rows] if calib else None,
+        )
+    train_rows_aug = [(sql, rt, "") for sql, rt in train_sqls]
     if cache:
         cache.save()
         print(f"encoding cache: {cache.stats()}")
@@ -341,17 +330,11 @@ def main() -> None:
         "neo": NeoCostModel(in_dim=nenc.width, seed=0),
     }
     families = {k: v for k, v in families.items() if k in selected}
-    train_rows_aug = [(sql, rt, "") for sql, rt in train_sqls]
     for fam, model in families.items():
         t0 = time.time()
-        if fam in ("treelstm", "gerelt4"):
-            tr, te, ca, rts, tr_rows = tree_train, tree_test, tree_calib, rt_train, train_rows_aug
-        elif fam == "mscn":
-            tr, te, ca, rts, tr_rows = mscn_train, mscn_test, mscn_calib, rt_train_orig, train.rows
-        elif fam == "neo":
-            tr, te, ca, rts, tr_rows = neo_train, neo_test, neo_calib, rt_train_orig, train.rows
-        else:
-            tr, te, ca, rts, tr_rows = enc_train, enc_test, enc_calib, rt_train, train_rows_aug
+        tr, te, ca = encoded[model.ENCODING]
+        tr_rows = train.rows if model.ENCODING in ("mscn", "neo") else train_rows_aug
+        rts = [row[1] for row in tr_rows]
         if fam == "linear":
             model.fit(tr, rts)
         else:

@@ -50,11 +50,7 @@ from deep_query_optimization_spark.estimator.enc_cache import (  # noqa: E402
     schema_signature,
 )
 from deep_query_optimization_spark.estimator.metrics import bucketize, mae, mcc_metrics  # noqa: E402
-from deep_query_optimization_spark.estimator.model import (  # noqa: E402
-    Gerelt4CostModel,
-    GRUCostModel,
-    TreeLSTMCostModel,
-)
+from deep_query_optimization_spark.estimator.model import FAMILIES  # noqa: E402
 from deep_query_optimization_spark.session import get_spark  # noqa: E402
 
 
@@ -103,9 +99,10 @@ def main() -> None:
     scales = [parse_spec(s) for s in sys.argv[2:]]
 
     only = os.environ.get("DQO_FAMILIES", "gru")
-    selected = {f.strip() for f in only.split(",")}
-    need_tree = bool(selected & {"treelstm", "gerelt4"})
-    need_vec = bool(selected & {"gru", "mlp", "cnn"})
+    selected = {f.strip() for f in only.split(",")} & set(FAMILIES)
+    encodings = {FAMILIES[f].ENCODING for f in selected}
+    if len(encodings) > 1:
+        raise SystemExit("train plan and tree families in separate runs (one encoding per run)")
     aug_n = int(os.environ.get("DQO_AUG", "0"))
 
     spark = get_spark("dqo-train-joint")
@@ -127,11 +124,10 @@ def main() -> None:
             sc.corpus_dir / "enc_cache.pkl",
             schema_signature(sc.corpus_dir / "schema.json", width),
         )
-        enc_vec = cache.wrap("vec", engine.encode_sql)
-        enc_tree = cache.wrap("tree", engine.encode_sql_tree)
-        enc = enc_tree if need_tree else enc_vec
-        if need_tree and need_vec:
-            raise SystemExit("train vec and tree families in separate runs (one encoding per run)")
+        if "tree" in encodings:
+            enc = cache.wrap("tree", engine.encode_sql_tree)
+        else:
+            enc = cache.wrap("vec", engine.encode_sql)
 
         train = QueriesDataset.load(str(sc.corpus_dir / "workload.csv"))
         test_p = sc.corpus_dir / "test.csv"
@@ -183,11 +179,6 @@ def main() -> None:
     lr = float(os.environ.get("DQO_LR", "2e-3"))
     embed = int(os.environ.get("DQO_EMBED", "64"))
     hidden = int(os.environ.get("DQO_HIDDEN", "64"))
-    families = {
-        "gru": lambda: GRUCostModel(in_dim=width, embed_dim=embed, hidden=hidden, seed=0),
-        "treelstm": lambda: TreeLSTMCostModel(in_dim=width, embed_dim=embed, hidden=hidden, seed=0),
-        "gerelt4": lambda: Gerelt4CostModel(in_dim=width, embed_dim=embed, hidden=hidden, seed=0),
-    }
     report: dict = {
         "scales": {
             s.name: {"train_rows": s.n_train, "repeat": s.repeat, "test_rows": len(s.test_rows)}
@@ -204,14 +195,13 @@ def main() -> None:
     # from an existing checkpoint — joint training then refines a
     # converged single-scale model instead of rediscovering everything
     init = os.environ.get("DQO_INIT")
-    for fam in sorted(selected & set(families)):
+    for fam in sorted(selected):
         t0 = time.time()
         if init:
-            loader = {"gru": GRUCostModel, "treelstm": TreeLSTMCostModel, "gerelt4": Gerelt4CostModel}[fam]
-            model = loader.load(init)
+            model = FAMILIES[fam].load(init)
             print(f"{fam}: warm-start from {init}")
         else:
-            model = families[fam]()
+            model = FAMILIES[fam](in_dim=width, embed_dim=embed, hidden=hidden, seed=0)
         model.fit(X, y, epochs=epochs, lr=lr, batch_size=batch)
         res: dict = {"fit_seconds": round(time.time() - t0, 1)}
         for sc in scales:
