@@ -15,13 +15,35 @@ an estimator → score queries. This class is that lifecycle on Spark:
 Every step is also usable directly from its module; the facade is for
 parity with the reference's driver scripts (``dqo/lab/drivers/*``,
 ``dqo/generate_queries.py``, ``dqo/estimator/*/train_tpch.py``).
+
+Encodings are memoized per engine, keyed by (kind, sql). Serving keeps
+the last ``ENCODE_MEMO_SIZE`` in memory. Given ``encode_cache=<path>``,
+the memo is not capped and persists across processes:
+
+- Why: encoding a corpus for training costs one Spark plan round-trip
+  per query (about 600 s for a 9k-row augmented corpus), paid again by
+  every train, fine-tune, sweep and calibration run. Encodings are pure
+  in (sql, stats snapshot, encoder width), so every rerun after the
+  first can be a lookup.
+- Invalidation: the file holds one signature, a digest of the stats
+  snapshot and the encoder width (``encoding_signature``). Each
+  snapshot loads the file under its own signature; a mismatch, a torn
+  file or an older format is a miss, never a partial read, because
+  stale stats silently shifting selectivity features is the failure
+  this must never introduce.
+- Saves (``save_encodings``) happen only when the memo gained entries,
+  through a temp file and ``os.replace``: a reader never sees a torn
+  file, and concurrent writers may race safely, since equal keys map to
+  equal values and the last writer wins.
 """
 
 from __future__ import annotations
 
+import hashlib
 import json
 import logging
 import os
+import pickle
 from collections import OrderedDict
 from concurrent.futures import ThreadPoolExecutor, wait
 from typing import NamedTuple
@@ -31,8 +53,10 @@ from pyspark.sql import DataFrame, SparkSession
 
 from deep_query_optimization_spark.catalog import TPCH_TABLES, Database, load_tables
 from deep_query_optimization_spark.estimator import QueriesDataset
-from deep_query_optimization_spark.estimator.metrics import bucketize, mae, mcc_metrics
+from deep_query_optimization_spark.estimator.evaluate import score
 from deep_query_optimization_spark.estimator.model import FAMILIES
+from deep_query_optimization_spark.estimator.mscn import MSCNEncoder
+from deep_query_optimization_spark.estimator.neo import NeoEncoder
 from deep_query_optimization_spark.generator.guided import BalancedQueryGen
 from deep_query_optimization_spark.generator.partitioner import Log2Partitioner
 from deep_query_optimization_spark.lab.executor import QueryLog, SparkQueryRunner
@@ -44,6 +68,11 @@ from deep_query_optimization_spark.stats import collect_stats
 # Memoized plan encodings per engine, LRU. Corpus encodings are 4.8 KB
 # at the median and 15 KB at most, so a full memo holds about 16 MB.
 ENCODE_MEMO_SIZE = 1024
+# bumped whenever the pickled layout of the persisted memo changes
+ENCODE_CACHE_FORMAT = 2
+# the query-level encoders of the MSCN and Neo families, by ENCODING;
+# "plan" and "tree" come from the PlanEncoder
+SET_ENCODERS = {"mscn": MSCNEncoder, "neo": NeoEncoder}
 
 _log = logging.getLogger(__name__)
 
@@ -55,7 +84,15 @@ class EncodeCacheInfo(NamedTuple):
     hits: int
     misses: int
     size: int
-    capacity: int
+    capacity: int | None  # None: not capped (persisted memo)
+
+
+def encoding_signature(db: Database, width: int) -> str:
+    """Digest of everything a persisted encoding depends on besides its
+    SQL: the stats snapshot and the encoder width."""
+    h = hashlib.md5(json.dumps(db.to_json(), sort_keys=True).encode())
+    h.update(f"width={width}".encode())
+    return h.hexdigest()
 
 
 class DQOEngine:
@@ -66,6 +103,7 @@ class DQOEngine:
         tables: tuple[str, ...] = TPCH_TABLES,
         snapshot_path: str | None = None,
         log_path: str | None = None,
+        encode_cache: str | None = None,
     ) -> None:
         self.spark = spark
         self.data_dir = data_dir
@@ -76,10 +114,15 @@ class DQOEngine:
         log = QueryLog(log_path) if log_path else None
         self.runner = SparkQueryRunner(spark, clear_cache=False, log=log)
         self._encoder: PlanEncoder | None = None
+        self._set_encoders: dict = {}  # SET_ENCODERS kind -> encoder of self.db
         # (kind, sql) -> encoding; written only by the calling thread
         self._memo: OrderedDict[tuple[str, str], tuple] = OrderedDict()
         self._memo_hits = 0
         self._memo_misses = 0
+        self.encode_cache = encode_cache
+        self._memo_cap = None if encode_cache else ENCODE_MEMO_SIZE
+        self._memo_signature: str | None = None
+        self._memo_dirty = False
         self._pool: ThreadPoolExecutor | None = None
         self.model = None  # a FAMILIES model, once trained or loaded
         # latched True after a failed checkpoint probe: default-on
@@ -102,7 +145,46 @@ class DQOEngine:
         # encoder, and no encoding memoized from the old one may be served
         self.db = db
         self._encoder = None
+        self._set_encoders = {}
         self._memo.clear()
+        if self.encode_cache:
+            self._load_encodings()
+
+    def _load_encodings(self) -> None:
+        """Fill the memo from ``encode_cache`` when the file was saved
+        under this snapshot's signature; anything else is a miss."""
+        self._memo_signature = encoding_signature(self.db, self.encoder.width)
+        self._memo_dirty = False
+        try:
+            with open(self.encode_cache, "rb") as fh:
+                blob = pickle.load(fh)
+        except FileNotFoundError:
+            return
+        except Exception as exc:  # a torn or foreign file is a miss
+            name = type(exc).__name__
+            _log.warning("encoding cache %s: unreadable (%s: %s); starting fresh", self.encode_cache, name, exc)
+            return
+        if not (isinstance(blob, dict) and blob.get("format") == ENCODE_CACHE_FORMAT):
+            _log.warning("encoding cache %s: older format; starting fresh", self.encode_cache)
+            return
+        if blob.get("signature") != self._memo_signature:
+            _log.warning("encoding cache %s: stats or encoder changed; starting fresh", self.encode_cache)
+            return
+        for key, enc in blob["encodings"].items():
+            self._memo[key] = _freeze(enc)
+
+    def save_encodings(self) -> None:
+        """Persist the memo to ``encode_cache`` if it gained entries
+        since it was loaded or last saved; atomic (temp + replace)."""
+        if not (self.encode_cache and self._memo_dirty):
+            return
+        os.makedirs(os.path.dirname(os.path.abspath(self.encode_cache)), exist_ok=True)
+        tmp = f"{self.encode_cache}.tmp{os.getpid()}"
+        blob = {"format": ENCODE_CACHE_FORMAT, "signature": self._memo_signature, "encodings": dict(self._memo)}
+        with open(tmp, "wb") as fh:
+            pickle.dump(blob, fh, protocol=5)
+        os.replace(tmp, self.encode_cache)
+        self._memo_dirty = False
 
     @property
     def encoder(self) -> PlanEncoder:
@@ -292,13 +374,22 @@ class DQOEngine:
         like ``encode_sql``."""
         return self._encodings("tree", [sql])[sql]
 
+    def encode(self, kind: str, sqls: list[str]) -> list:
+        """The ``kind`` encoding of each of ``sqls``, in input order:
+        "plan" and "tree" as ``encode_sql`` and ``encode_sql_tree``,
+        "mscn" and "neo" the query-level encodings of those families.
+        Memoized like ``encode_sql``; the distinct SQL not yet memoized
+        are encoded concurrently."""
+        encs = self._encodings(kind, sqls)
+        return [encs[sql] for sql in sqls]
+
     def _encodings(self, kind: str, sqls: list[str]) -> dict[str, tuple]:
         """The encoding of each distinct SQL of ``sqls``, from the memo
         or by one plan round-trip each; several round-trips run
         concurrently on the encode pool. Only the calling thread touches
         the memo, which is not locked: an engine serves one caller
         thread at a time."""
-        encoder = self.encoder  # built here, never on a pool thread
+        encoder = self._encoder_for(kind)  # built here, never on a pool thread
         out: dict[str, tuple] = {}
         missing = []
         for sql in dict.fromkeys(sqls):
@@ -312,19 +403,25 @@ class DQOEngine:
         self._memo_misses += len(missing)
         encs = []
         if len(missing) == 1:
-            encs = [_encode(self.spark, encoder, kind, missing[0])]
+            encs = [_encode(self.spark, self.db, encoder, kind, missing[0])]
         elif missing:
             pool = self._encode_pool()
-            futures = [pool.submit(_encode, self.spark, encoder, kind, sql) for sql in missing]
+            futures = [pool.submit(_encode, self.spark, self.db, encoder, kind, sql) for sql in missing]
             wait(futures)  # no encode outlives the call, even on failure
             encs = [f.result() for f in futures]  # the first failure, in input order
         for sql, enc in zip(missing, encs):
-            for arr in enc[:2]:
-                arr.flags.writeable = False
-            self._memo[(kind, sql)] = out[sql] = enc
-            if len(self._memo) > ENCODE_MEMO_SIZE:
+            self._memo[(kind, sql)] = out[sql] = _freeze(enc)
+            if self._memo_cap is not None and len(self._memo) > self._memo_cap:
                 self._memo.popitem(last=False)
+        self._memo_dirty |= bool(missing)
         return out
+
+    def _encoder_for(self, kind: str):
+        if kind not in SET_ENCODERS:
+            return self.encoder
+        if kind not in self._set_encoders:
+            self._set_encoders[kind] = SET_ENCODERS[kind](self.encoder.db)
+        return self._set_encoders[kind]
 
     def _encode_pool(self) -> ThreadPoolExecutor:
         if self._pool is None:
@@ -333,9 +430,9 @@ class DQOEngine:
 
     def encode_cache_info(self) -> EncodeCacheInfo:
         """Hits and misses of the encoding memo under ``encode_sql``,
-        ``encode_sql_tree`` and ``estimate_many``; a miss is one Spark
-        plan round-trip."""
-        return EncodeCacheInfo(self._memo_hits, self._memo_misses, len(self._memo), ENCODE_MEMO_SIZE)
+        ``encode_sql_tree``, ``encode`` and ``estimate_many``; a miss is
+        one Spark plan round-trip."""
+        return EncodeCacheInfo(self._memo_hits, self._memo_misses, len(self._memo), self._memo_cap)
 
     def train_estimator(
         self,
@@ -346,7 +443,7 @@ class DQOEngine:
         family: str = "mlp",
     ) -> dict:
         """Train one cost-model family (a ``FAMILIES`` name) — the
-        facade twin of tools/train_estimator.py's side-by-side
+        facade twin of ``tools/train.py train``'s side-by-side
         comparison."""
         cls = FAMILIES[family]
         train, test = ds.stratified_split(0.2, seed=seed)
@@ -355,24 +452,17 @@ class DQOEngine:
         enc_test = [encode(sql) for sql, _, _ in test.rows]
         self.model = cls(in_dim=self.encoder.width, seed=seed)
         self._model_family = family
-        self.model.fit(enc_train, [r for _, r, _ in train.rows], epochs=epochs, lr=lr)
-
-        def evaluate(plans, rows):
-            if not rows:
-                return {}
-            preds = self.model.predict(plans)
-            buckets = [bucketize(r) for _, r, _ in rows]
-            pred_buckets = [int(np.clip(round(p), -3, 8)) for p in preds]
-            m = mcc_metrics(buckets, pred_buckets)
-            m["mae"] = mae(buckets, pred_buckets)
-            return m
-
-        return {"train": evaluate(enc_train, train.rows), "test": evaluate(enc_test, test.rows)}
+        rt_train = [r for _, r, _ in train.rows]
+        self.model.fit(enc_train, rt_train, epochs=epochs, lr=lr)
+        return {
+            "train": score(self.model, enc_train, rt_train),
+            "test": score(self.model, enc_test, [r for _, r, _ in test.rows]),
+        }
 
     def load_estimator(self, model_json: str, family: str | None = None):
         """Serve saved cost-model weights from the live engine.
 
-        Loads a ``model_<family>.json`` written by tools/train_estimator.py
+        Loads a ``model_<family>.json`` written by tools/train.py
         / pick_best_model.py so ``estimate()`` scores queries with the
         EXACT model file the calibration/hint reports evaluated — the
         reference's deploy step is likewise load-a-checkpoint-and-serve
@@ -411,8 +501,6 @@ class DQOEngine:
         if best_dir is None:
             repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
             best_dir = os.path.join(repo, ".data", "est_best")
-            if not os.path.isdir(best_dir):  # pre-round-8 staging dir
-                best_dir = os.path.join(repo, ".data", "est_r7_best")
         with open(os.path.join(best_dir, "choice.json")) as fh:
             choice = json.load(fh)
         fam = choice["family"]
@@ -450,9 +538,23 @@ class DQOEngine:
         return log2_bucket(self.estimate(sql))
 
 
-def _encode(spark: SparkSession, encoder: PlanEncoder, kind: str, sql: str) -> tuple:
+def _encode(spark: SparkSession, db: Database, encoder, kind: str, sql: str):
     """One plan round-trip, planning only (safe on any thread): the
-    optimized plan's JSON, parsed and encoded as ``kind``."""
+    optimized plan's JSON, parsed and encoded as ``kind``; for the set
+    kinds, the analyzed plan lifted into the Query IR and encoded."""
+    if kind in SET_ENCODERS:
+        from deep_query_optimization_spark.relational.parser import parse_sql
+
+        return encoder.encode(parse_sql(spark, sql, db))
     plan_json = spark.sql(sql)._jdf.queryExecution().optimizedPlan().toJSON()
     root = parse_plan_json(plan_json)
     return encoder.encode_tree(root) if kind == "tree" else encoder.encode_plan(root)
+
+
+def _freeze(enc):
+    """Mark an encoding's arrays read-only: memoized encodings are
+    shared with every later caller."""
+    for arr in enc if isinstance(enc, tuple) else (enc,):
+        if isinstance(arr, np.ndarray):
+            arr.flags.writeable = False
+    return enc

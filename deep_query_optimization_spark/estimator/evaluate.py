@@ -10,6 +10,7 @@ content as plain text/JSON artifacts.
 from __future__ import annotations
 
 import json
+import math
 from pathlib import Path
 
 import numpy as np
@@ -17,12 +18,43 @@ import numpy as np
 from deep_query_optimization_spark.estimator.metrics import (
     BUCKET_HI,
     BUCKET_LO,
+    bucketize,
     confusion_matrix,
     mae,
     maximize_binary_split,
     mcc_metrics,
     per_bucket_errors,
 )
+
+
+def score(model, plans, runtimes, affine: tuple[float, float] | None = None) -> dict:
+    """Bucket metrics of ``model`` on encoded ``plans`` against their
+    measured ``runtimes`` (s): MCC metrics plus MAE, in log2 buckets.
+    Predictions, first mapped through ``affine`` = (a, b) when given,
+    round to the nearest bucket clipped to ``BUCKET_LO..BUCKET_HI``.
+    Empty input scores ``{}``."""
+    if not runtimes:
+        return {}
+    preds = model.predict(plans)
+    if affine is not None:
+        a, b = affine
+        preds = [a * p + b for p in preds]
+    buckets = [bucketize(r) for r in runtimes]
+    pred_buckets = [int(np.clip(round(p), BUCKET_LO, BUCKET_HI)) for p in preds]
+    m = mcc_metrics(buckets, pred_buckets)
+    m["mae"] = mae(buckets, pred_buckets)
+    return m
+
+
+def fit_affine(model, plans, runtimes) -> tuple[float, float]:
+    """Least-squares (a, b) mapping ``model``'s log2 predictions on
+    ``plans`` onto the log2 of their measured ``runtimes`` — the
+    calibration set's correction for a systematic timing shift."""
+    preds = np.asarray(model.predict(plans), dtype=float)
+    target = np.asarray([math.log2(max(r, 1e-4)) for r in runtimes], dtype=float)
+    A = np.stack([preds, np.ones_like(preds)], axis=1)
+    (a, b), *_ = np.linalg.lstsq(A, target, rcond=None)
+    return float(a), float(b)
 
 
 def confusion_text(y_true, y_pred) -> str:
@@ -129,8 +161,6 @@ def compare_versions(checkpoint_paths, plans, rows) -> dict[str, dict]:
     ``rows`` are QueriesDataset rows [(sql, runtime, plan_json)];
     returns {checkpoint_name: evaluation_report}. Render with
     ``compare_reports``."""
-    from deep_query_optimization_spark.estimator.metrics import bucketize
-
     y_true = [bucketize(r) for _, r, _ in rows]
     out: dict[str, dict] = {}
     for p in checkpoint_paths:

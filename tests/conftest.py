@@ -10,6 +10,10 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 SF_DIR = "/root/testdata/sf0.001"
 
 
+def pytest_configure(config):
+    config.addinivalue_line("markers", "slow: a longer end-to-end test; runs in tier-1 like the rest")
+
+
 @pytest.fixture(scope="session")
 def spark():
     from deep_query_optimization_spark.session import get_spark

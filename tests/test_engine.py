@@ -473,3 +473,130 @@ def test_optimize_sql_logs_swallowed_errors_at_debug(spark, sf_dir, caplog):
     errors = [r.exc_info[0] for r in caplog.records if r.levelno == logging.DEBUG]
     assert len(errors) == 2
     assert errors[1] is RuntimeError
+
+
+# -- the persisted encoding memo (DQOEngine(encode_cache=...)) ------------
+
+
+def _cached_engine(spark, sf_dir, cache, snapshot=SNAPSHOT):
+    from deep_query_optimization_spark.engine import DQOEngine
+
+    engine = DQOEngine(spark, sf_dir, snapshot_path=str(snapshot), encode_cache=str(cache))
+    engine.snapshot()
+    return engine
+
+
+def _scaled_snapshot(tmp_path, factor=1000):
+    from deep_query_optimization_spark.catalog import Database
+
+    other = Database.load(str(SNAPSHOT))
+    other["orders"].stats.rows *= factor
+    path = tmp_path / f"scaled{factor}.json"
+    other.save(str(path))
+    return path
+
+
+def test_encode_cache_miss_then_hit_and_roundtrip(spark, sf_dir, tmp_path):
+    import numpy as np
+
+    sql = "SELECT COUNT(*) AS c FROM orders"
+    engine = _cached_engine(spark, sf_dir, tmp_path / "c.pkl")
+    a = engine.encode_sql(sql)
+    assert engine.encode_sql(sql) is a  # second call served from the memo
+    info = engine.encode_cache_info()
+    assert (info.hits, info.misses, info.capacity) == (1, 1, None)
+    engine.save_encodings()
+
+    again = _cached_engine(spark, sf_dir, tmp_path / "c.pkl")
+    got = again.encode_sql(sql)
+    assert again.encode_cache_info()[:2] == (1, 0)  # disk hit, no plan round-trip
+    np.testing.assert_array_equal(got[0], a[0])
+    np.testing.assert_array_equal(got[1], a[1])
+    with pytest.raises(ValueError):  # loaded encodings are shared too: read-only
+        got[1][0, 0] = 1.0
+
+
+def test_encode_cache_kinds_kept_apart(spark, sf_dir, tmp_path):
+    sql = "SELECT MIN(o_totalprice) AS m FROM orders WHERE o_totalprice > 1000"
+    engine = _cached_engine(spark, sf_dir, tmp_path / "c.pkl")
+    plan, tree = engine.encode_sql(sql), engine.encode_sql_tree(sql)
+    (neo,) = engine.encode("neo", [sql])
+    assert engine.encode_cache_info()[:3] == (0, 3, 3)  # no cross-kind hit
+    engine.save_encodings()
+
+    again = _cached_engine(spark, sf_dir, tmp_path / "c.pkl")
+    assert (len(again.encode_sql(sql)), len(again.encode_sql_tree(sql))) == (len(plan), len(tree)) == (2, 3)
+    assert again.encode("neo", [sql])[0].tolist() == neo.tolist()
+    assert again.encode_cache_info()[:2] == (3, 0)
+
+
+def test_encode_cache_signature_mismatch_starts_fresh(spark, sf_dir, tmp_path):
+    """Stale stats must never leak into features: a memo saved under one
+    snapshot is a miss under another, including on a re-snapshot, which
+    reloads the file under the new signature."""
+    engine = _cached_engine(spark, sf_dir, tmp_path / "c.pkl")
+    engine.encode_sql("SELECT COUNT(*) AS c FROM orders")
+    engine.save_encodings()
+
+    other = _cached_engine(spark, sf_dir, tmp_path / "c.pkl", _scaled_snapshot(tmp_path))
+    assert other.encode_cache_info().size == 0
+    engine.snapshot_path = str(_scaled_snapshot(tmp_path))
+    engine.snapshot()
+    assert engine.encode_cache_info().size == 0
+    engine.snapshot_path = str(SNAPSHOT)
+    engine.snapshot()
+    assert engine.encode_cache_info().size == 1
+
+
+def test_encode_cache_corrupt_or_old_file_is_a_miss(spark, sf_dir, tmp_path):
+    import pickle
+
+    sql = "SELECT COUNT(*) AS c FROM orders"
+    path = tmp_path / "c.pkl"
+    path.write_bytes(b"not a pickle")
+    engine = _cached_engine(spark, sf_dir, path)
+    assert engine.encode_cache_info().size == 0
+    assert len(engine.encode_sql(sql)) == 2
+    assert engine.encode_cache_info().misses == 1
+
+    # the format of the retired standalone disk cache
+    path.write_bytes(pickle.dumps({"signature": "x", "data": {("vec", sql): "stale"}}))
+    assert _cached_engine(spark, sf_dir, path).encode_cache_info().size == 0
+
+
+def test_encode_cache_save_noop_when_clean(spark, sf_dir, tmp_path):
+    engine = _cached_engine(spark, sf_dir, tmp_path / "c.pkl")
+    engine.save_encodings()
+    assert not (tmp_path / "c.pkl").exists()  # nothing to write
+    engine.encode_sql("SELECT COUNT(*) AS c FROM orders")
+    engine.save_encodings()
+    stamp = (tmp_path / "c.pkl").stat().st_mtime_ns
+    (tmp_path / "c.pkl").touch()
+    touched = (tmp_path / "c.pkl").stat().st_mtime_ns
+    engine.encode_sql("SELECT COUNT(*) AS c FROM orders")  # a hit changes nothing
+    engine.save_encodings()
+    assert (tmp_path / "c.pkl").stat().st_mtime_ns == touched >= stamp
+
+
+def test_encoding_signature_tracks_stats_and_width(tmp_path):
+    from deep_query_optimization_spark.catalog import Database
+    from deep_query_optimization_spark.engine import encoding_signature
+
+    db = Database.load(str(SNAPSHOT))
+    a = encoding_signature(db, 50)
+    assert encoding_signature(Database.load(str(SNAPSHOT)), 50) == a
+    assert encoding_signature(Database.load(str(_scaled_snapshot(tmp_path))), 50) != a
+    assert encoding_signature(db, 60) != a
+
+
+def test_enc_cache_env_maps_onto_the_tool(spark, sf_dir, tmp_path, monkeypatch):
+    from tools.train import env_cache, open_engine
+
+    monkeypatch.delenv("DQO_ENC_CACHE", raising=False)
+    assert env_cache() is None
+    assert env_cache(tmp_path / "d.pkl") == str(tmp_path / "d.pkl")
+    monkeypatch.setenv("DQO_ENC_CACHE", str(tmp_path / "c.pkl"))
+    assert env_cache(tmp_path / "d.pkl") == str(tmp_path / "c.pkl")
+    engine = open_engine(spark, sf_dir, SNAPSHOT, env_cache())
+    assert engine.encode_cache == str(tmp_path / "c.pkl")
+    assert engine.encode_cache_info().capacity is None

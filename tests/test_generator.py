@@ -174,7 +174,7 @@ def test_balanced_gen_fills_buckets_live_sf01(spark):
     runtime buckets within a bounded time budget — the spread the
     estimator comparison needs (VERDICT r1 #7). The default-suite twin
     of this check is the committed artifact reports/report.json from
-    tools/train_estimator.py."""
+    ``tools/train.py train``."""
     from deep_query_optimization_spark.engine import DQOEngine
     from deep_query_optimization_spark.generator.guided import BalancedQueryGen
     from deep_query_optimization_spark.generator.partitioner import Log2Partitioner

@@ -16,7 +16,7 @@ from tools.pick_best_model import collect_candidates, collect_sweep_candidates, 
 def test_model_tools_import():
     """The tools that train or serve a model family import cleanly, so a
     broken import fails here rather than in the next training run."""
-    for tool in ("hint_report", "finetune_estimator", "calibration_report", "train_estimator", "train_joint"):
+    for tool in ("hint_report", "calibration_report", "train"):
         importlib.import_module(f"tools.{tool}")
 
 
@@ -117,3 +117,39 @@ def test_filter_workload_drops_heldout_rows(tmp_path):
     assert (kept, dropped) == (2, 1)
     back = QueriesDataset.load(str(corpus / "workload.csv"))
     assert {sql for sql, _, _ in back.rows} == {"SELECT 1 AS a FROM t", "SELECT 3 AS a FROM t"}
+
+
+def test_train_fanned_out_weights_equal_in_process(spark, sf_dir, tmp_path, monkeypatch):
+    """``tools/train.py train`` over two families fits them on spawned
+    workers after one encode pass; the saved weights are byte-equal to
+    the same fits run in-process, and every family directory is a
+    complete est_dir."""
+    import shutil
+    from pathlib import Path
+
+    from tools import train as tool
+
+    repo = Path(__file__).resolve().parent.parent
+    workload = tmp_path / "w"
+    workload.mkdir()
+    rows = QueriesDataset.load(str(repo / "artifacts" / "est_r11" / "workload.csv")).rows[:8]
+    QueriesDataset(rows).save(str(workload / "workload.csv"))
+    snapshot = repo / "deep_query_optimization_spark" / "snapshots" / "sf0.01_schema.json"
+    shutil.copy(snapshot, workload / "schema.json")
+    monkeypatch.setenv("DQO_EPOCHS", "1")
+    fams = ["mlp", "neo"]
+
+    monkeypatch.setattr(tool, "default_parallelism", lambda: 2)
+    fanned = tool.train(spark, workload, sf_dir, tmp_path / "fan", fams)
+    monkeypatch.setattr(tool, "default_parallelism", lambda: 1)
+    in_process = tool.train(spark, workload, sf_dir, tmp_path / "one", fams)
+
+    assert list(fanned["models"]) == fams
+    for fam in fams:
+        fam_dir, model = tmp_path / "fan" / fam, f"model_{fam}.json"
+        assert (fam_dir / model).read_bytes() == (tmp_path / "one" / fam / model).read_bytes()
+        assert {p.name for p in fam_dir.iterdir()} == {model, "report.json", "workload.csv", "schema.json"}
+        for res in (fanned["models"][fam], in_process["models"][fam]):
+            res.pop("fit_seconds")
+    assert fanned == in_process
+    assert json.loads((tmp_path / "fan" / "report.json").read_text())["n"] == 8

@@ -12,7 +12,8 @@ Usage:
     python tools/calibration_report.py [est_dir] [model_family] [out_json]
 
 ``est_dir`` must hold ``workload.csv`` + ``model_<family>.json`` +
-``schema.json`` (the train_estimator.py output directory).
+``schema.json`` (a per-family directory of ``tools/train.py train``).
+``DQO_ENC_CACHE=<path>`` persists the engine's encodings across runs.
 """
 
 from __future__ import annotations
@@ -28,11 +29,11 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from deep_query_optimization_spark.engine import DQOEngine  # noqa: E402
 from deep_query_optimization_spark.estimator import QueriesDataset  # noqa: E402
 from deep_query_optimization_spark.estimator.metrics import bucketize, mae, mcc_metrics  # noqa: E402
 from deep_query_optimization_spark.estimator.model import FAMILIES, predict_udf  # noqa: E402
 from deep_query_optimization_spark.session import get_spark  # noqa: E402
+from tools.train import env_cache, open_engine  # noqa: E402
 
 
 def main() -> None:
@@ -46,19 +47,14 @@ def main() -> None:
 
     spark = get_spark("dqo-calibration")
     spark.sparkContext.setLogLevel("ERROR")
-    engine = DQOEngine(spark, sf_dir, snapshot_path=str(est_dir / "schema.json"))
-    engine.snapshot()
+    engine = open_engine(spark, sf_dir, est_dir / "schema.json", env_cache())
 
     needs_children = model.ENCODING == "tree"
-    encode = engine.encode_sql_tree if needs_children else engine.encode_sql
-    from deep_query_optimization_spark.estimator.enc_cache import from_env as _cache_from_env
-
-    cache = _cache_from_env(engine.snapshot_path or "", engine.encoder.width)
-    if cache:
-        encode = cache.wrap("tree" if needs_children else "vec", encode)
+    encs = engine.encode(model.ENCODING, [sql for sql, _, _ in ds.rows])
+    engine.save_encodings()
+    print(f"encoding cache: {engine.encode_cache_info()}")
     recs = []
-    for sql, runtime, _ in ds.rows:
-        enc = encode(sql)
+    for (sql, runtime, _), enc in zip(ds.rows, encs):
         rec = {
             "query": sql,
             "runtime": float(runtime),
@@ -76,9 +72,6 @@ def main() -> None:
     scored = df.withColumn("pred_log2", udf(*[F.col(c) for c in cols])).select(
         "query", "runtime", "pred_log2"
     )
-    if cache:
-        cache.save()
-        print(f"encoding cache: {cache.stats()}")
     rows = scored.collect()  # small: one double per query
 
     actual_b = [bucketize(r["runtime"]) for r in rows]

@@ -3,7 +3,7 @@
 Guards the noisy-pretrain/clean-finetune recipe: the pretrain corpus
 comes from co-located generators whose random streams can, rarely,
 emit a query that is also in the frozen clean test or calibration
-split. tools/train_estimator.py's leak guard only checks the corpus it
+split. ``tools/train.py``'s leak guard only checks the corpus it
 trains on directly — weights PRE-trained on a held-out query would
 sneak the same leak in through the fine-tune stage's starting point,
 so the pretrain corpus must be scrubbed against the held-out sets

@@ -1,6 +1,6 @@
 """Generate (and incrementally checkpoint) a balanced labeled workload.
 
-Split out of ``tools/train_estimator.py`` so the expensive part — hours
+Split out of ``tools/train.py train`` so the expensive part — hours
 of timed query execution against live Spark — survives interruption and
 can run while training/evaluation iterates on the already-saved prefix.
 The reference's scale here is the point: its drivers target 100k labeled
@@ -15,7 +15,7 @@ least-filled log2 buckets instead of starting over.
 Usage:
     python tools/gen_workload.py [sf_dir] [n_queries] [out_dir]
 
-Env knobs (same semantics as train_estimator.py):
+Env knobs (same semantics as ``tools/train.py train``):
     DQO_BUCKET_LO / DQO_BUCKET_HI   Log2Partitioner range (default -3..5)
     DQO_TIMEOUT_S                   per-query watchdog (default 60)
     DQO_BUDGET_S                    wall budget (default 7200)

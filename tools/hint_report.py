@@ -9,7 +9,7 @@ Usage:
     python tools/hint_report.py [sf_dir] [est_dir] [family] [n] [out_json]
 
 ``est_dir`` must hold a trained ``model_<family>.json`` + schema.json
-(train_estimator.py output); ``family`` defaults to the best structural
+(a ``tools/train.py train`` family directory); ``family`` defaults to the best structural
 model recorded in ``report.json``.
 """
 

@@ -4,10 +4,10 @@ assemble a serving directory for the calibration/hint/report tools.
 Candidates come from two recipes the label-noise study set against each
 other (reports/estimator_label_noise.json):
   - scratch-clean: trained from scratch on the quiet-relabeled corpus
-    (<train_root>/report.json, tools/train_parallel.py output)
+    (<train_root>/report.json, ``tools/train.py train`` output)
   - pretrain+clean-ft: round-5 noisy-pretrained weights fine-tuned on
     the same clean corpus (<ft_root>/finetune_<fam>.json,
-    tools/finetune_estimator.py output)
+    ``tools/train.py finetune`` output)
 
 For each candidate the score is max(raw, affine-calibrated) clean-test
 accuracy — the same quantity BASELINE.md reports for the reference
@@ -16,7 +16,8 @@ accuracy — the same quantity BASELINE.md reports for the reference
 The winner's weights are copied into <best_dir> together with
 schema.json and the frozen clean TEST set as workload.csv, which is the
 exact layout tools/calibration_report.py and tools/hint_report.py
-consume. choice.json records what won and why.
+consume. choice.json records what won and why. The default <best_dir>,
+.data/est_best, is the directory ``DQOEngine.load_best`` serves from.
 
 Usage:
     python tools/pick_best_model.py <train_root> <ft_root> <best_dir> \
@@ -67,7 +68,7 @@ def collect_candidates(
 
 
 def collect_sweep_candidates(sweep_roots, families) -> list[tuple[float, str, str, str]]:
-    """Capacity-sweep candidates (tools/sweep_capacity.py layout:
+    """Capacity-sweep candidates (``tools/train.py sweep`` layout:
     <root>/<family>_<embed>x<hidden>[a<aug>]/report.json + model file).
     Only families the serving tools can load are eligible; missing or
     failed configs are skipped."""
@@ -138,7 +139,7 @@ def pick(
 def main() -> None:
     train_root = Path(sys.argv[1] if len(sys.argv) > 1 else ".data/est_r6")
     ft_root = Path(sys.argv[2] if len(sys.argv) > 2 else ".data/ft_r6")
-    best_dir = Path(sys.argv[3] if len(sys.argv) > 3 else ".data/est_r7_best")
+    best_dir = Path(sys.argv[3] if len(sys.argv) > 3 else ".data/est_best")
     schema = Path(sys.argv[4] if len(sys.argv) > 4 else ".data/est_clean_full/schema.json")
     test_csv = Path(sys.argv[5] if len(sys.argv) > 5 else ".data/est_split/test_clean.csv")
     fams = tuple(sys.argv[6].split(",")) if len(sys.argv) > 6 else STRUCTURAL

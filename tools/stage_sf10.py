@@ -6,7 +6,10 @@ candidates' held-out sf10 test accuracy from their own reports, stages
 the winner as .data/est_sf10_best/{model_gru.json,schema.json,
 workload.csv,calibration.json} (the layout calibration_report.py,
 hint_report.py and engine.optimize_sql consume), and refreshes
-reports/estimator_calibration_sf10.json.
+reports/estimator_calibration_sf10.json. Candidates are the
+``tools/train.py finetune`` and ``tools/train.py joint`` outputs under
+``.data``; calibration reuses the split's ``enc_cache.pkl`` through
+``DQO_ENC_CACHE``, the engine's persisted encoding memo.
 
 Staging is ATOMIC: everything is produced in a sibling ``<out>.tmp``
 directory and swapped in with os.replace only once every artifact —
@@ -156,7 +159,7 @@ def main() -> None:
     out = Path(sys.argv[1]) if len(sys.argv) > 1 else REPO / ".data/est_sf10_best"
     cands = candidate_acc()
     if not cands:
-        raise SystemExit("no sf10-capable model found (fine-tune one with tools/finetune_estimator.py first)")
+        raise SystemExit("no sf10-capable model found (fine-tune one with `tools/train.py finetune` first)")
     # candidates report accuracy on the test split they were trained
     # against; each round's re-split changes the sf10 test set, so
     # cross-era numbers are not comparable. Restrict the tournament to
