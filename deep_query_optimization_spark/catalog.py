@@ -224,8 +224,9 @@ _READ_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict[tuple[str, str], Data
 )
 # r13 hygiene: bound each per-session memo. A long-lived session
 # scanning many sf_dirs would otherwise accumulate plan entries
-# forever; FIFO-evict the oldest (dict preserves insertion order) past
-# a cap well above the 10 tables × handful of sf_dirs a session uses.
+# forever; past a cap well above the 10 tables × handful of sf_dirs a
+# session uses, evict the least recently read (a hit moves its entry to
+# the end of the dict, so the first key is the coldest).
 _READ_CACHE_MAX = 64
 
 
@@ -243,8 +244,9 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
     per_session = _READ_CACHE.setdefault(spark, {})
     key = (sf_dir, name)
-    cached = per_session.get(key)
+    cached = per_session.pop(key, None)
     if cached is not None:
+        per_session[key] = cached  # now the most recently read
         return cached
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -16,8 +16,8 @@ from pathlib import Path
 import numpy as np
 
 from deep_query_optimization_spark.estimator.metrics import (
-    BUCKET_HI,
     BUCKET_LO,
+    bucket_of_log2,
     bucketize,
     confusion_matrix,
     mae,
@@ -31,8 +31,7 @@ def score(model, plans, runtimes, affine: tuple[float, float] | None = None) -> 
     """Bucket metrics of ``model`` on encoded ``plans`` against their
     measured ``runtimes`` (s): MCC metrics plus MAE, in log2 buckets.
     Predictions, first mapped through ``affine`` = (a, b) when given,
-    round to the nearest bucket clipped to ``BUCKET_LO..BUCKET_HI``.
-    Empty input scores ``{}``."""
+    are bucketed by ``bucket_of_log2``. Empty input scores ``{}``."""
     if not runtimes:
         return {}
     preds = model.predict(plans)
@@ -40,7 +39,7 @@ def score(model, plans, runtimes, affine: tuple[float, float] | None = None) -> 
         a, b = affine
         preds = [a * p + b for p in preds]
     buckets = [bucketize(r) for r in runtimes]
-    pred_buckets = [int(np.clip(round(p), BUCKET_LO, BUCKET_HI)) for p in preds]
+    pred_buckets = [bucket_of_log2(p) for p in preds]
     m = mcc_metrics(buckets, pred_buckets)
     m["mae"] = mae(buckets, pred_buckets)
     return m
@@ -166,6 +165,6 @@ def compare_versions(checkpoint_paths, plans, rows) -> dict[str, dict]:
     for p in checkpoint_paths:
         model = load_checkpoint(str(p))
         preds = model.predict(plans)
-        y_pred = [int(np.clip(round(float(x)), BUCKET_LO, BUCKET_HI)) for x in preds]
+        y_pred = [bucket_of_log2(x) for x in preds]
         out[Path(p).stem] = evaluation_report(y_true, y_pred)
     return out

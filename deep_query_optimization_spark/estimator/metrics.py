@@ -19,10 +19,16 @@ import numpy as np
 BUCKET_LO, BUCKET_HI = -3, 8
 
 
+def bucket_of_log2(log2_s: float, lo: int = BUCKET_LO, hi: int = BUCKET_HI) -> int:
+    """The bucket of a log2-seconds value, such as a model's prediction:
+    rounded half to even and clipped to ``lo..hi``."""
+    return int(np.clip(round(float(log2_s)), lo, hi))
+
+
 def bucketize(runtime_s: float, lo: int = BUCKET_LO, hi: int = BUCKET_HI) -> int:
     if runtime_s <= 0:
         return lo
-    return int(np.clip(round(math.log2(runtime_s)), lo, hi))
+    return bucket_of_log2(math.log2(runtime_s), lo, hi)
 
 
 def confusion_matrix(y_true: np.ndarray, y_pred: np.ndarray, lo: int = BUCKET_LO, hi: int = BUCKET_HI) -> np.ndarray:

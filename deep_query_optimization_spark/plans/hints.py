@@ -16,11 +16,13 @@ the 10 B-row fact table or from the 100-row filtered dimension; the
 candidate set stays tiny (≤ ``limit`` emissions), scoring is pure
 driver-side inference, and the chosen SQL runs unmodified through the
 normal path. Each candidate costs one Spark plan round-trip (about
-85 ms at sf0.01: ``spark.sql``, ``optimizedPlan()``, ``toJSON()``,
-parse and encode) and one model forward. ``engine.estimate_many`` runs
-the round-trips concurrently, and the canonical candidate is the text
-the hint gate already estimated, so its encoding comes from the
-engine's memo.
+31 ms at sf0.01: ``spark.sql`` 10 ms, ``optimizedPlan()`` 11 ms,
+``toJSON()`` 5 ms, parse and encode 3 ms) and one model forward.
+``toJSON()`` took 48 ms before the py4j sockets got TCP_NODELAY (see
+``session``), because plan JSON is larger than py4j's 8 KB writer
+buffer. ``engine.estimate_many`` runs the round-trips concurrently,
+and the canonical candidate is the text the hint gate already
+estimated, so its encoding comes from the engine's memo.
 """
 
 from __future__ import annotations

@@ -28,6 +28,9 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 # serializes shuffle-partition overrides across concurrent
 # run_available_now calls (see its docstring)
 _CONF_LOCK = threading.Lock()
+# longest an availableNow drain may run before it is stopped and the
+# call raises TimeoutError
+DRAIN_TIMEOUT_S = 300
 
 EVENTS_SCHEMA = T.StructType(
     [
@@ -159,39 +162,59 @@ USER_STATS_SCHEMA = T.StructType(
 _STATE_SCHEMA = T.StructType(
     [T.StructField("n", T.LongType()), T.StructField("total", T.DoubleType())]
 )
+# a user's state is dropped once the watermark (event time less 30 min)
+# passes their latest event by 30 min
+_USER_WATERMARK = "30 minutes"
+_USER_IDLE_MS = 30 * 60 * 1000
 
 
 def _user_counter(key, pdfs, state: GroupState):
     """applyInPandasWithState kernel: running per-user event count +
-    value sum, state dropped after 30 min idle (processing time)."""
+    value sum, state dropped after 30 min idle (event time)."""
     if state.hasTimedOut:
         state.remove()
         return
     n, total = state.get if state.exists else (0, 0.0)
+    last_ms = state.getCurrentWatermarkMs()
     import pandas as pd
 
     for pdf in pdfs:
         n += len(pdf)
         total += float(pdf["value"].sum())
+        last_ms = max(last_ms, int(pdf["ts_ms"].max()))
     state.update((n, total))
-    state.setTimeoutDuration(30 * 60 * 1000)
+    state.setTimeoutTimestamp(last_ms + _USER_IDLE_MS)
     yield pd.DataFrame([{"user_id": key[0], "n_events": n, "total_value": round(total, 2)}])
 
 
 def user_running_stats(events: DataFrame) -> DataFrame:
     """Custom stateful operator via applyInPandasWithState — the
     escape hatch for semantics Spark lacks natively (SURVEY beyond-
-    reference scope)."""
+    reference scope). Idle state times out in event time. With a
+    processing-time timeout Spark runs an empty micro-batch after every
+    batch to look for expired state, so an availableNow drain of it
+    never finishes."""
     return (
-        events.groupBy("user_id")
+        events.withWatermark("ts", _USER_WATERMARK)
+        .withColumn("ts_ms", F.unix_millis("ts"))
+        .groupBy("user_id")
         .applyInPandasWithState(
             _user_counter,
             outputStructType=USER_STATS_SCHEMA,
             stateStructType=_STATE_SCHEMA,
             outputMode="update",
-            timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
+            timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
     )
+
+
+def _await_drain(q) -> None:
+    """Wait for an availableNow query to finish. One still running after
+    ``DRAIN_TIMEOUT_S`` is stopped and the drain raises, so no caller
+    reads a partial sink or leaves the query running."""
+    if not q.awaitTermination(DRAIN_TIMEOUT_S):
+        q.stop()
+        raise TimeoutError(f"availableNow drain {q.name or q.id} did not finish within {DRAIN_TIMEOUT_S} s; stopped")
 
 
 def run_available_now(
@@ -251,7 +274,7 @@ def run_available_now(
                 .trigger(availableNow=True)
                 .start()
             )
-            q.awaitTermination(300)
+            _await_drain(q)
         finally:
             if prev_parts is not None:
                 spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
@@ -303,7 +326,7 @@ def run_available_now_to_files(
                 .trigger(availableNow=True)
                 .start()
             )
-            q.awaitTermination(300)
+            _await_drain(q)
         finally:
             if prev_parts is not None:
                 spark.conf.set("spark.sql.shuffle.partitions", prev_parts)

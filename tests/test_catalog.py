@@ -75,8 +75,8 @@ def test_from_struct():
 
 
 def test_read_table_memo_bounded_and_session_keyed(monkeypatch, spark, sf_dir):
-    """r13 hygiene: the per-session read_table memo FIFO-evicts past
-    its cap, and distinct session objects get distinct memos (weakref
+    """r13 hygiene: the per-session read_table memo evicts past its
+    cap, and distinct session objects get distinct memos (weakref
     keying — a replaced session is never handed another's plans)."""
     from deep_query_optimization_spark import catalog
 
@@ -96,3 +96,18 @@ def test_read_table_memo_bounded_and_session_keyed(monkeypatch, spark, sf_dir):
     catalog.read_table(other, sf_dir, "region")
     assert (sf_dir, "region") in catalog._READ_CACHE[other]
     assert (sf_dir, "region") not in catalog._READ_CACHE[spark]
+
+
+def test_read_table_memo_evicts_least_recently_read(monkeypatch, spark, sf_dir):
+    """A hit refreshes its entry: read a, read b, re-read a, read c
+    evicts b, not a."""
+    from deep_query_optimization_spark import catalog
+
+    monkeypatch.setattr(catalog, "_READ_CACHE", type(catalog._READ_CACHE)())
+    monkeypatch.setattr(catalog, "_READ_CACHE_MAX", 2)
+    a = catalog.read_table(spark, sf_dir, "region")
+    catalog.read_table(spark, sf_dir, "nation")
+    assert catalog.read_table(spark, sf_dir, "region") is a
+    catalog.read_table(spark, sf_dir, "supplier")
+    assert list(catalog._READ_CACHE[spark]) == [(sf_dir, "region"), (sf_dir, "supplier")]
+    assert catalog.read_table(spark, sf_dir, "region") is a

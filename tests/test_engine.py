@@ -400,6 +400,48 @@ def test_repeated_estimate_is_a_memo_hit(served):
         served.encode_sql(sql)[1][0, 0] = 1.0
 
 
+def test_py4j_connections_run_with_tcp_nodelay(served, spark):
+    """After a batch of plan round-trips, every live py4j connection,
+    the calling thread's and each encode pool thread's, has TCP_NODELAY
+    on its JVM socket, so plan JSON over py4j's 8 KB writer buffer does
+    not wait out the Python side's delayed ACK (see session.py)."""
+    from deep_query_optimization_spark import session
+
+    sqls = [f"SELECT COUNT(*) AS c FROM orders WHERE o_totalprice > {v}" for v in range(101, 106)]
+    before = served.encode_cache_info()
+    served.estimate_many(sqls)
+    assert served.encode_cache_info().misses - before.misses == 5
+    conns = session._py4j_connections(spark.sparkContext._gateway)
+    assert len(conns) >= 1 + len(served._pool._threads) >= 2
+    assert all(conn.getSocket().getTcpNoDelay() for conn in conns)
+
+
+def test_tcp_nodelay_failure_warns_once_and_still_serves(served, spark, sf_dir, monkeypatch, caplog):
+    """When the connections cannot be reached, every pool thread's try
+    fails, one WARNING says why, and estimates come out as before."""
+    import logging
+
+    from deep_query_optimization_spark import session
+
+    def blocked(gateway):
+        raise RuntimeError("reflection blocked")
+
+    monkeypatch.setattr(session, "_py4j_connections", blocked)
+    monkeypatch.setattr(session, "_nodelay_warned", False)
+    engine = _packaged_stats_engine(spark, sf_dir)
+    engine.model = served.model
+    sqls = [f"SELECT MAX(l_extendedprice) AS m FROM lineitem WHERE l_quantity > {v}" for v in range(1, 9)]
+    with caplog.at_level(logging.WARNING, logger="deep_query_optimization_spark.session"):
+        got = engine.estimate_many(sqls)
+        session._py4j_tcp_nodelay()
+    engine._pool.shutdown()
+    warnings = [r for r in caplog.records if r.name == "deep_query_optimization_spark.session"]
+    assert len(warnings) == 1
+    assert warnings[0].levelno == logging.WARNING
+    assert "RuntimeError: reflection blocked" in warnings[0].getMessage()
+    assert got == served.estimate_many(sqls)
+
+
 def test_resnapshot_rebuilds_encoder_and_drops_memo(spark, sf_dir, tmp_path):
     """A re-snapshot must featurize against the new stats, not serve the
     encoder (or the memoized encodings) built from the old ones."""

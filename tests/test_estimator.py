@@ -10,6 +10,7 @@ import pytest
 
 from deep_query_optimization_spark.estimator import MLPCostModel, QueriesDataset, bucketize, mae, mcc_metrics
 from deep_query_optimization_spark.estimator.metrics import (
+    bucket_of_log2,
     confusion_matrix,
     maximize_binary_split,
     per_bucket_errors,
@@ -22,6 +23,19 @@ def test_bucketize_matches_reference_formula():
     assert bucketize(0.01) == -3  # clipped
     assert bucketize(300) == 8  # clipped
     assert bucketize(5.0) == round(math.log2(5.0))
+
+
+def test_bucket_of_log2_is_the_predicted_bucket_rule():
+    """One rule buckets predictions for score, compare_versions and the
+    calibration report: the inline rule each of them used, on Python,
+    float64 and float32 values, with ties and both clips."""
+    rng = np.random.default_rng(0)
+    values = [-9.0, -3.5, -2.5, -0.5, 0.5, 1.5, 2.5, 7.5, 8.5, 20.0]
+    values += list(rng.uniform(-6, 11, 200)) + list(rng.uniform(-6, 11, 50).astype(np.float32))
+    for v in values:
+        got = bucket_of_log2(v)
+        assert type(got) is int
+        assert got == int(np.clip(round(v), -3, 8)) == int(np.clip(round(float(v)), -3, 8))
 
 
 def test_dataset_csv_roundtrip(tmp_path):

@@ -166,3 +166,24 @@ def test_nanos_probe_memo_bounded(monkeypatch, spark, sf_dir, tmp_path):
     # re-probing an evicted path repopulates (correct, just not cached)
     streaming.events_file_stream(spark, paths[0])
     assert paths[0] in streaming._NANOS_PROBE
+
+
+def test_drain_timeout_stops_query_and_raises(monkeypatch, spark, events_dir, tmp_path):
+    """A drain that outlives DRAIN_TIMEOUT_S raises instead of returning
+    a partial sink, and leaves no query running; the shuffle-partition
+    override is restored either way."""
+    monkeypatch.setattr(streaming, "DRAIN_TIMEOUT_S", 0.001)
+    parts = spark.conf.get("spark.sql.shuffle.partitions")
+    stream = streaming.events_file_stream(spark, events_dir)
+    with pytest.raises(TimeoutError):
+        streaming.run_available_now(
+            streaming.hourly_rollup(stream), "timeout_test", str(tmp_path / "c1"), state_partitions=3
+        )
+    assert spark.streams.active == []
+    stream = streaming.events_file_stream(spark, events_dir)
+    with pytest.raises(TimeoutError):
+        streaming.run_available_now_to_files(
+            streaming.sessionize(stream), str(tmp_path / "out"), str(tmp_path / "c2"), state_partitions=3
+        )
+    assert spark.streams.active == []
+    assert spark.conf.get("spark.sql.shuffle.partitions") == parts

@@ -22,7 +22,6 @@ import json
 import sys
 from pathlib import Path
 
-import numpy as np
 import pandas as pd
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
@@ -30,7 +29,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 from pyspark.sql import functions as F  # noqa: E402
 
 from deep_query_optimization_spark.estimator import QueriesDataset  # noqa: E402
-from deep_query_optimization_spark.estimator.metrics import bucketize, mae, mcc_metrics  # noqa: E402
+from deep_query_optimization_spark.estimator.metrics import bucket_of_log2, bucketize, mae, mcc_metrics  # noqa: E402
 from deep_query_optimization_spark.estimator.model import FAMILIES, predict_udf  # noqa: E402
 from deep_query_optimization_spark.session import get_spark  # noqa: E402
 from tools.train import env_cache, open_engine  # noqa: E402
@@ -75,7 +74,7 @@ def main() -> None:
     rows = scored.collect()  # small: one double per query
 
     actual_b = [bucketize(r["runtime"]) for r in rows]
-    pred_b = [int(np.clip(round(r["pred_log2"]), -3, 8)) for r in rows]
+    pred_b = [bucket_of_log2(r["pred_log2"]) for r in rows]
     m = mcc_metrics(actual_b, pred_b)
     m["mae"] = mae(actual_b, pred_b)
 
