@@ -32,6 +32,19 @@ but every default below is chosen to survive a 1000x scale-up):
   pinned-thread mode, so every Python thread opens its own connection:
   ``get_spark`` covers the caller's, and the engine's encode pool sets
   the option as each of its threads starts.
+- Spark's generated-class cache (``spark.sql.codegen.cache.maxEntries``)
+  holds 2048 classes instead of the default 100. It is a static conf, so
+  it is set here, where the session is built. The working sets outgrow
+  the default: the 50-query mix compiles 474 classes and the 64-SQL
+  lifecycle label pool 211. At 100 entries every warm pass compiled
+  them all again (513-517 classes per pass over the mix) and loaded
+  about 1,000 more JVM classes per pass, so Metaspace grew 185 → 197 MB
+  over five passes. At 2048 a warm pass compiles 0-6 classes and
+  Metaspace stays flat (185 → 190 MB). Measured on a 4-core box at
+  sf0.01: warm-pass wall time over the mix 14.1-17.3 → 10.9-13.6 s,
+  repeat-pass label p50 77 → 57 ms. Timing a query twice and keeping
+  the second run (``lab``) measures warm code only when the first run's
+  classes are still cached.
 """
 
 from __future__ import annotations
@@ -90,6 +103,8 @@ def get_spark(
         "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEMORY", "8g"),
         "spark.ui.enabled": "false",
         "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
+        # static: sized to the working set, see the module docstring
+        "spark.sql.codegen.cache.maxEntries": "2048",
     }
     if extra_conf:
         conf.update(extra_conf)

@@ -228,12 +228,14 @@ def run_available_now(
     """Drain the stream with availableNow into a memory sink and return
     the result table (testing/backfill pattern).
 
-    With ``cleanup`` (the default) the drained rows are detached from
-    the memory sink — the sink's temp view is dropped and the
-    checkpoint directory removed — so repeated gate/bench runs don't
-    accumulate memory-sink tables or temp checkpoints. Pass
-    ``cleanup=False`` to keep the live sink (incremental two-phase
-    tests resuming from the same checkpoint).
+    With ``cleanup`` (the default) the sink's temp view is dropped and
+    a checkpoint this call created is removed, so repeated gate/bench
+    runs don't accumulate memory-sink views or temp checkpoints. The
+    returned DataFrame was resolved before the drop: its plan holds the
+    memory sink itself, which stays alive (and its rows readable) as
+    long as the DataFrame does, so no rows are copied through the
+    driver. Pass ``cleanup=False`` to keep the view (incremental
+    two-phase tests resuming from the same checkpoint).
 
     ``state_partitions`` sizes the state store's parallelism (the
     shuffle-partition count baked into the new checkpoint). Stateful
@@ -279,13 +281,11 @@ def run_available_now(
             if prev_parts is not None:
                 spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     sink = spark.table(query_name)
-    if not cleanup:
-        return sink
-    rows, schema = sink.collect(), sink.schema
-    spark.catalog.dropTempView(query_name)
-    if own_checkpoint:
-        shutil.rmtree(checkpoint, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
+    if cleanup:
+        spark.catalog.dropTempView(query_name)
+        if own_checkpoint:
+            shutil.rmtree(checkpoint, ignore_errors=True)
+    return sink
 
 
 def run_available_now_to_files(
@@ -301,16 +301,19 @@ def run_available_now_to_files(
     anywhere in the drain (the memory sink of ``run_available_now``
     holds the whole result in the driver; fine for tests, wrong for a
     backfill whose output is large). File sinks are append-only, so
-    this requires a watermarked append-mode query. The sink directory
-    (with its ``_spark_metadata`` transaction log) must outlive the
-    returned DataFrame — callers own cleanup; the default is a fresh
-    temp dir."""
+    this requires a watermarked append-mode query. A checkpoint this
+    call created is removed once the drain ends. The output directory
+    (with its ``_spark_metadata`` transaction log) is kept, because the
+    returned DataFrame reads it: callers own its cleanup; the default
+    is a fresh temp dir."""
+    import shutil
     import tempfile
 
     spark = stream_df.sparkSession
     if path is None:
         path = tempfile.mkdtemp(prefix="dqo_stream_out_")
-    if checkpoint is None:
+    own_checkpoint = checkpoint is None
+    if own_checkpoint:
         checkpoint = tempfile.mkdtemp(prefix="dqo_stream_ckpt_")
     with _CONF_LOCK:
         prev_parts = None
@@ -330,4 +333,6 @@ def run_available_now_to_files(
         finally:
             if prev_parts is not None:
                 spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+            if own_checkpoint:
+                shutil.rmtree(checkpoint, ignore_errors=True)
     return spark.read.parquet(path)

@@ -39,6 +39,35 @@ def test_hourly_rollup_matches_batch(spark, events_dir, sf_dir, ckpt):
     assert got == expected
 
 
+def test_memory_drain_cleanup_returns_sink_rows(monkeypatch, spark, events_dir, sf_dir, tmp_path):
+    """With cleanup the returned DataFrame reads the memory sink itself:
+    its view is dropped and the call's own checkpoint removed, yet every
+    row of the batch twin is still there."""
+    import tempfile
+
+    from deep_query_optimization_spark.workload import q_events_hourly_rollup
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    stream = streaming.events_file_stream(spark, events_dir)
+    out = streaming.run_available_now(streaming.hourly_rollup(stream), "rollup_cleanup_test")
+    assert not spark.catalog.tableExists("rollup_cleanup_test")
+    assert not list(tmp_path.glob("dqo_stream_ckpt_*"))
+    assert sorted(out.collect()) == sorted(q_events_hourly_rollup(spark, sf_dir).collect())
+
+
+def test_file_drain_removes_own_checkpoint(monkeypatch, spark, events_dir, tmp_path):
+    """run_available_now_to_files deletes the checkpoint it created and
+    keeps the output directory its returned DataFrame reads."""
+    import tempfile
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    stream = streaming.events_file_stream(spark, events_dir)
+    out = streaming.run_available_now_to_files(streaming.sessionize(stream), state_partitions=4)
+    assert not list(tmp_path.glob("dqo_stream_ckpt_*"))
+    assert len(list(tmp_path.glob("dqo_stream_out_*"))) == 1
+    assert out.count() > 0
+
+
 def test_streaming_dedup(spark, events_dir, ckpt):
     stream = streaming.events_file_stream(spark, events_dir)
     deduped = streaming.streaming_dedup(stream)
